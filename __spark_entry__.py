@@ -5,7 +5,7 @@
 training-data pipeline ops), each a (spark, sf_dir) -> DataFrame callable.
 `oracle_sql()` — matching ANSI SQL for DuckDB over the same parquet views.
 Queries without an oracle entry are genuinely non-SQL-expressible (the BSP
-crawl loop, bloom/cuckoo tiers, image decode) and get rows-only checks.
+crawl loop, bloom tier, image decode) and get rows-only checks.
 
 Column names are aliased identically on both sides; doubles are rounded on
 both sides; timestamps are reduced to epoch microseconds (bigint) so the

@@ -119,7 +119,7 @@ def run_level(cpus: int, scale: str, wave_budget: int, max_waves: int, reps: int
         # physical cores. Without this, local[N]'s python workers overflow
         # onto the host's idle cores: a local[4] leg's payload stage was
         # measured running ~1.5× faster than 4 dedicated workers can
-        # (kernel_scaling.py), i.e. the nominal-4-core level was borrowing
+        # (BENCH/BASELINE.md §2e), i.e. the nominal-4-core level was borrowing
         # 2-4 extra cores, deflating the N→4N ratio. A real N-core executor
         # node runs its task threads AND its python workers on the same N
         # cores, so the pinned legs are the faithful cluster model.

@@ -13,6 +13,9 @@ boundaries are shuffles; the only driver-side state is small counters.
     7. CHILDREN  posexplode links → canon → dedup → admit   (urlnorm/seen.py)
     8. COMMIT    atomically advance the manifest            (checkpoint.py)
 
+CrawlEngine._run drives these as phases: `_admit` (or `_resume`) once,
+then `_wave` (1-7) and `_commit` (8) per wave, and `_outputs` at the end.
+
 Termination: pending empty (the batch analog of the reference's inactivity
 exit, scrapemate.go:247-276), a StopScraping failure (cancelFn analog), or
 the max-wave guard.
@@ -20,9 +23,10 @@ the max-wave guard.
 
 from __future__ import annotations
 
-import os
 import time
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -56,6 +60,33 @@ TERMINAL_SCHEMA = (
 )
 ORDER_SCHEMA = "wave int, rank long, job_id string, url_canon string, is_init boolean"
 SEEN_TBL_SCHEMA = "url_hash long, cache_key string, first_seen_wave int"
+RESULTS_SCHEMA = (
+    "job_id string, parent_id string, url_canon string, wave int, rank int, "
+    "status int, attempts int, from_cache boolean, image_id string, "
+    "latency_us long, caption string, phash long, psnr_db double, pixels_ok boolean"
+)
+
+_OUTPUT_TABLES = ("order", "results", "terminal", "responses")
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
+_INTERPRETED = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
+
+
+@contextmanager
+def _conf_scope(spark, values: dict[str, str]):
+    """Set the session SQL conf `values` for the body and restore the
+    previous values afterwards, also when the body raises."""
+    conf = spark.conf
+    prev = {k: conf.get(k) for k in values}
+    try:
+        for k, v in values.items():
+            conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            conf.set(k, v)
 
 
 @dataclass
@@ -141,6 +172,42 @@ class CrawlRun:
     resumed_from_wave: int = 0
 
 
+@dataclass
+class _Loop:
+    """The BSP driver's state, carried from wave to wave."""
+
+    pending: DataFrame
+    seen: DataFrame
+    wave: int
+    seq_base: int
+    n_pending: int
+    n_init_pending: int
+    stopped: bool = False
+    resumed_from: int = 0
+    metrics: list[dict] = field(default_factory=list)
+    # per-wave output frames by table, unioned at the end of the run
+    parts: dict[str, list[DataFrame]] = field(
+        default_factory=lambda: {t: [] for t in _OUTPUT_TABLES}
+    )
+
+
+@dataclass
+class _Wave:
+    """One wave's frames between its fused action and its commit."""
+
+    sel: DataFrame  # the persisted selection, released at commit
+    future: DataFrame  # pending rows not yet eligible
+    leftover: DataFrame  # eligible rows the selection left out
+    retried: DataFrame
+    admitted: DataFrame
+    seen_delta: DataFrame
+    order: DataFrame
+    results: DataFrame
+    terminal: DataFrame
+    metrics: dict
+    stamps: tuple[float, float, float]  # wave start, expand start, commit start
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -154,7 +221,7 @@ class CrawlEngine:
         table_io: TableIO | None = None,
     ):
         self.spark = spark
-        self._n_shuffle_init = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        self._n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # C-2: cache-first fetch — hits skip the fetch join but still flow
         # through parse/process/expansion (scrapemate.go:345-375).
         # Stored pre-partitioned AND pre-sorted on its join key: the cached
@@ -165,7 +232,7 @@ class CrawlEngine:
         # treatment for the pages table below: this is the in-memory twin of
         # bucketing the Iceberg table by its join key at cluster scale.
         self.response_cache = (
-            response_cache.repartition(self._n_shuffle_init, "cache_key")
+            response_cache.repartition(self._n_shuffle, "cache_key")
             .sortWithinPartitions("cache_key")
             .persist()
             if response_cache is not None
@@ -176,7 +243,7 @@ class CrawlEngine:
         # one-time batch cost, amortized over every wave
         self.pages = (
             FT.resolve_redirects(pages)
-            .repartition(self._n_shuffle_init, "url_hash")
+            .repartition(self._n_shuffle, "url_hash")
             .sortWithinPartitions("url_hash")
             .persist()
         )
@@ -188,17 +255,9 @@ class CrawlEngine:
         self.io = table_io if table_io is not None else (
             TableIO(spark, self.cfg.workdir) if self.cfg.workdir else None
         )
-        self._n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
         self._seen_chain = 0
-        self._n_seed_allowed = 0
-        self._profile = os.environ.get("CRAWLSPARK_PROFILE") == "1"
-        # A/B escape hatch: "1" compiles the per-wave checkpoint plans with
-        # AQE disabled (the rejected round-4 experiment) — kept only so
-        # bench/run_ab_ckpt.py can re-measure it; the default (AQE-compiled)
-        # won the interleaved A/B 4/4 pairs (BENCH/ab_r4_ckpt.json, B/A=0.80)
-        self._ckpt_static = os.environ.get("CRAWLSPARK_CKPT_STATIC") == "1"
-        self._t_last = 0.0
         self._seen_rows = 0  # driver-side running count (no extra actions)
+        self._bloom_synced = False
         self.bloom = (
             SEEN.PartitionedBloom(self.cfg.bloom_partitions, self.cfg.bloom_bits)
             if self.cfg.use_bloom
@@ -214,19 +273,17 @@ class CrawlEngine:
         tier_bytes = self.bloom.n_partitions * (self.bloom.m_bits // 8)
         return tier_bytes <= self.cfg.bloom_broadcast_max_mb * 1024 * 1024
 
-    def _bloom_maintain(self, seen_full, seen_delta) -> None:
+    def _bloom_maintain(self, seen_full) -> None:
         """Build the bloom tier only once the seen set is big enough for the
         prefilter to pay for itself: construction is deferred, then a
         one-time full build catches up. After that sync, per-wave deltas
-        ride the fused action's `bloom` branch (zero extra driver jobs) —
-        this method's delta path is only a fallback for callers that bypass
-        the BSP loop (`seen_delta` kept in the signature for them)."""
+        ride the fused action's `bloom` branch (zero extra driver jobs)."""
         if self.bloom is None:
             return
         if self._seen_rows < self.cfg.bloom_prefilter_min_seen // 2:
             self._bloom_synced = False
             return
-        if not getattr(self, "_bloom_synced", False):
+        if not self._bloom_synced:
             self.bloom.add_from_df(seen_full)
             self._bloom_synced = True
 
@@ -238,25 +295,9 @@ class CrawlEngine:
         loop in this; callers that materialize a CrawlRun's lazy outputs
         AFTER run() returns (the end-of-run results union compiles there)
         can wrap that consumption too."""
-        from contextlib import contextmanager
-
-        @contextmanager
-        def _cm():
-            conf = self.spark.conf
-            if self.cfg.wave_budget > self.cfg.interpreted_below_wave_budget:
-                yield
-                return
-            prev_ws = conf.get("spark.sql.codegen.wholeStage", "true")
-            prev_fm = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-            try:
-                conf.set("spark.sql.codegen.wholeStage", "false")
-                conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-                yield
-            finally:
-                conf.set("spark.sql.codegen.wholeStage", prev_ws)
-                conf.set("spark.sql.codegen.factoryMode", prev_fm)
-
-        return _cm()
+        if self.cfg.wave_budget > self.cfg.interpreted_below_wave_budget:
+            return nullcontext()
+        return _conf_scope(self.spark, _INTERPRETED)
 
     def _retry_action(self, fn, attempts: int = 3, delay_s: float = 1.0):
         """F-4 provider-error restart analog (scrapemate.go:532-543: log,
@@ -269,23 +310,6 @@ class CrawlEngine:
                 if a == attempts - 1:
                     raise
                 time.sleep(delay_s)
-
-    def _tick(self, label: str, wave: int) -> None:
-        if self._profile:
-            now = time.monotonic()
-            st = self.spark.sparkContext.statusTracker()
-            jobs = st.getJobIdsForGroup(f"wave-{wave}")
-            n_stages = 0
-            for j in jobs:
-                ji = st.getJobInfo(j)
-                if ji is not None:
-                    n_stages += len(ji.stageIds)
-            print(
-                f"[profile] wave={wave} {label}: {now - self._t_last:.2f}s "
-                f"(cum jobs={len(jobs)} stages={n_stages})",
-                flush=True,
-            )
-            self._t_last = now
 
     # ------------------------------------------------------------------ #
     def _admit_seeds(self, seeds: DataFrame):
@@ -597,19 +621,12 @@ class CrawlEngine:
         same computation, one fewer serial barrier per call site.
 
         The checkpoint plan is compiled UNDER AQE (the session default).
-        Round 4 trialled compiling it statically: under AQE,
-        Dataset.localCheckpoint materializes non-final query stages at
-        compile time even with eager=False (a 3M-row micro-repro shows
-        12.9 s vs 0.4 s per cut), so a static compile looked like a free
-        win. The full-loop interleaved A/B rejected it: the AQE-compiled
-        arm won all 4 pairs at comparable steal% (median B/A = 0.80,
-        BENCH/ab_r4_ckpt.json). The compile-time materialization is real
-        but NOT wasted — AQE uses the finished stages' runtime statistics
-        to re-plan the wave's downstream joins/aggregations, and losing
-        that (plus the checkpoint work no longer overlapping the wave
-        boundary) costs more than the per-cut barrier saves. Verdict:
-        keep AQE; CRAWLSPARK_CKPT_STATIC=1 preserves the losing arm for
-        re-measurement only.
+        Under AQE, Dataset.localCheckpoint materializes non-final query
+        stages at compile time even with eager=False, but that work is NOT
+        wasted: AQE uses the finished stages' runtime statistics to re-plan
+        the wave's downstream joins/aggregations, and the checkpoint work
+        overlaps the wave boundary (an interleaved A/B of compiling every
+        cut statically lost 4/4 pairs, BENCH/ab_r4_ckpt.json).
 
         `keep_layout` (round 5): compile THIS cut statically so the
         checkpointed frame keeps its physical layout metadata. Under AQE the
@@ -628,14 +645,9 @@ class CrawlEngine:
         if self.io:
             self.io.write_wave(df, table, wave)
             return self.io.read_wave(table, wave)
-        if self._ckpt_static or keep_layout:
-            conf = self.spark.conf
-            prev = conf.get("spark.sql.adaptive.enabled", "true")
-            try:
-                conf.set("spark.sql.adaptive.enabled", "false")
+        if keep_layout:
+            with _conf_scope(self.spark, _AQE_OFF):
                 return df.localCheckpoint(eager=False)
-            finally:
-                conf.set("spark.sql.adaptive.enabled", prev)
         return df.localCheckpoint(eager=False)
 
     # ------------------------------------------------------------------ #
@@ -666,13 +678,8 @@ class CrawlEngine:
         state. Block cleanup rides the context cleaner when the wave's
         Python references drop (memory mode holds them until the end-of-run
         output union, exactly as the persisted frames were held before)."""
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.adaptive.enabled", "true")
-        try:
-            conf.set("spark.sql.adaptive.enabled", "false")
+        with _conf_scope(self.spark, _AQE_OFF):
             return df.localCheckpoint(eager=False)
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev)
 
     # ------------------------------------------------------------------ #
     def run(self, seeds: DataFrame, resume: bool = False) -> CrawlRun:
@@ -680,470 +687,475 @@ class CrawlEngine:
             return self._run(seeds, resume)
 
     def _run(self, seeds: DataFrame, resume: bool = False) -> CrawlRun:
-        spark = self.spark
-        cfg = self.cfg
-        t0 = time.monotonic()
-
-        order_parts: list[DataFrame] = []
-        results_parts: list[DataFrame] = []
-        terminal_parts: list[DataFrame] = []
-        responses_parts: list[DataFrame] = []
-        metrics: list[dict] = []
-        resumed_from = 0
-
         manifest = self.io.read_manifest() if (resume and self.io) else None
-        if manifest:
-            wave = manifest["wave"]
-            seq_base = manifest["seq_base"]
-            stopped = manifest["stopped"]
-            resumed_from = wave
-            metrics = list(manifest.get("metrics", []))
-            pending = self.io.read_waves("pending", [wave], schema=None)
-            seen = self.io.read_waves(
-                "seen", list(range(0, wave + 1)), schema=SEEN_TBL_SCHEMA
-            )
-            for w0 in range(0, wave + 1):
-                for tbl, parts in (
-                    ("order", order_parts),
-                    ("results", results_parts),
-                    ("terminal", terminal_parts),
-                ):
-                    if self.io.wave_exists(tbl, w0):
-                        parts.append(self.io.read_wave(tbl, w0))
-            self._seen_rows = seen.count()
-            n_pending = manifest.get("n_pending")
-            if n_pending is None:  # pre-round-2 manifest — one-time fallback
-                n_pending = pending.count()
-            n_init_pending = manifest.get("n_init_pending")
-            if n_init_pending is None:
-                n_init_pending = pending.filter("is_init").count() if "is_init" in pending.columns else 0
-            self._bloom_maintain(seen, seen)  # rebuild tier from committed seen set
-        else:
-            wave = 0
-            stopped = False
-            pending, seen_delta, blocked_term = self._admit_seeds(seeds)
-            # wave-0 snapshot gets the same stored layout as every later
-            # wave's (host-bucketed, sorted) so wave 1's politeness windows
-            # ride it exchange-free too
-            pending = self._materialize(
-                pending.repartition(self._n_shuffle, "host_bucket")
-                .sortWithinPartitions("priority", "seq"),
-                "pending", 0, keep_layout=True,
-            )
-            seen = self._materialize(seen_delta, "seen", 0)
-            blocked_term = self._materialize(blocked_term, "terminal", 0)
-            terminal_parts.append(blocked_term)
-            # ONE setup action (round 6 second pass; was three sequential
-            # driver round-trips: the seed-rank collect inside _admit_seeds,
-            # an is_init count, and seen.count()): the pending stats and the
-            # seen count ride a single fused collect — the same union-by-
-            # _kind shape as the per-wave fused action, so both lazy
-            # checkpoint cuts materialize inside one job's stages too.
-            fused0 = pending.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("is_init").cast("long")).alias("n_init"),
-            ).select(F.lit("p").alias("_kind"), "n", "n_init").unionByName(
-                seen.agg(F.count("*").alias("n")).select(
-                    F.lit("s").alias("_kind"), "n"
-                ),
-                allowMissingColumns=True,
-            )
-            srows = {r["_kind"]: r for r in self._retry_action(fused0.collect)}
-            self._n_seed_allowed = int(srows["p"]["n"])
-            seq_base = self._n_seed_allowed
-            n_pending = self._n_seed_allowed
-            # how many seeds open an init BFS phase (F-5, scrapemate.go:489-523)
-            n_init_pending = int(srows["p"]["n_init"] or 0)
-            self._seen_rows = int(srows["s"]["n"])
-            self._bloom_maintain(seen, seen)
-            if self.io:
-                self.io.commit_manifest(
-                    {"wave": 0, "seq_base": seq_base, "stopped": False,
-                     "metrics": [], "n_pending": n_pending,
-                     "n_init_pending": n_init_pending}
-                )
-
-        # ---------------- BSP loop -------------------------------------- #
-        while wave < cfg.max_waves and not stopped:
-            wave += 1
-            wave_ts = wave * cfg.wave_period_us
-            wt0 = time.monotonic()
-            self._t_last = wt0
-            # tag the wave's jobs (UI debuggability; also lets the profile
-            # mode count scheduler round-trips per wave via statusTracker)
-            spark.sparkContext.setJobGroup(f"wave-{wave}", f"crawl wave {wave}")
-
-            # F-5 init phase: while any init job is pending, ONLY init jobs
-            # are eligible — the BFS-to-exhaustion-before-workers semantics
-            # of processInitJob (scrapemate.go:219-221, 489-523)
-            init_phase = n_init_pending > 0
-            elig_cond = F.col("not_before_us") <= wave_ts
-            if init_phase:
-                elig_cond = elig_cond & F.col("is_init")
-            eligible = pending.filter(elig_cond)
-            future = pending.filter(~elig_cond)
-
-            polite = politeness.per_host_topk(
-                eligible, self.budgets, cfg.default_host_budget, cfg.salt_buckets
-            )
-            # Selection-rank bucket from driver-tracked seq watermarks
-            # (frontier.with_inspark_rank_bucketed): seqs are assigned
-            # densely in [0, seq_base) and completion drains mostly from the
-            # front, so pending seqs concentrate in roughly the top
-            # n_pending of the space. An equal-slice map of
-            # [seq_base − n_pending, seq_base) is near-uniform there;
-            # stragglers below the watermark (out-of-order completions,
-            # retries) clamp into bucket 0 — a balance wobble, never an
-            # ordering error (the bucket stays monotone in seq).
-            nb_sel = self._n_shuffle
-            seq_lo = max(0, seq_base - max(1, n_pending))
-            seq_span = max(1, seq_base - seq_lo)
-            seq_bucket = F.greatest(
-                F.least(
-                    ((F.col("seq") - F.lit(seq_lo)) * F.lit(nb_sel) / F.lit(seq_span)).cast("int"),
-                    F.lit(nb_sel - 1),
-                ),
-                F.lit(0),
-            )
-            wave_sel = frontier.select_wave(
-                polite, cfg.wave_budget, seq_bucket=seq_bucket,
-                materialize=self._cut_lazy,
-            )
-            if cfg.fetch_profile:
-                # F-23: profile headers merged under the job's own
-                from crawlspark import stealth
-
-                wave_sel = stealth.with_profile_headers(
-                    wave_sel, spark, cfg.fetch_profile
-                )
-            wave_sel = wave_sel.persist()
-            fetched = FT.fetch_simulate(
-                wave_sel, self.pages, self.response_cache,
-                carry_body_html=cfg.extract_links_from_body,
-                carry_body_gz=cfg.decode_gzip_body,
-                carry_js_links=(cfg.fetcher == "js"),
-            )
-            if cfg.extract_links_from_body and "body_html" in fetched.columns:
-                # P-3 link extraction from the response body. Default: the
-                # every-anchor Catalyst regexp (no UDF). Job types that
-                # declare link_selectors (round 4) instead get their links
-                # from the CSS-selector engine (crawlspark/selectors.py —
-                # the goquery Find().Attr() analog, Arrow-batched); types
-                # without selectors fall back via coalesce, so the
-                # zero-config path stays pure Catalyst. Cache hits keep
-                # their stored out_links (extracted when the response was
-                # first fetched); body is dropped immediately so HTML never
-                # enters the persisted wave state.
-                anchor_links = F.regexp_extract_all(
-                    F.col("body_html"), F.lit(r'<a href="([^"]+)"'), 1
-                )
-                sel_types = {
-                    t: s.link_selectors
-                    for t, s in self.specs.items()
-                    if getattr(s, "link_selectors", ())
-                }
-                if sel_types:
-                    from crawlspark import selectors as SEL
-
-                    extracted = F.coalesce(
-                        SEL.links_by_type_udf(sel_types)(
-                            F.col("job_type"), F.col("body_html")
-                        ),
-                        anchor_links,
-                    )
-                else:
-                    extracted = anchor_links
-                fetched = fetched.withColumn(
-                    "out_links",
-                    F.when(
-                        ~F.col("from_cache") & F.col("body_html").isNotNull(),
-                        extracted,
-                    ).otherwise(F.col("out_links")),
-                ).drop("body_html")
-            if cfg.fetcher == "js" and "js_links" in fetched.columns:
-                # F-24: the js fetcher also observes render-injected links,
-                # appended after the static ones (document order, then render
-                # order). Cache hits keep their stored (already-effective) links.
-                fetched = fetched.withColumn(
-                    "out_links",
-                    F.when(
-                        F.col("from_cache"), F.col("out_links")
-                    ).otherwise(
-                        F.concat(
-                            F.coalesce(F.col("out_links"), F.array().cast("array<string>")),
-                            F.coalesce(F.col("js_links"), F.array().cast("array<string>")),
-                        )
-                    ),
-                ).drop("js_links")
-            if cfg.decode_gzip_body and "body_gz" in fetched.columns:
-                # F-11 transparent gzip decode (nethttp.go:76-86); the raw
-                # gz bytes are dropped so only the text enters the wave cache
-                fetched = fetched.withColumn(
-                    "body_text",
-                    F.when(~F.col("from_cache"), FT.gunzip_udf()(F.col("body_gz"))),
-                ).drop("body_gz")
-            if cfg.enable_hooks:
-                # F-29 hooks side-output (request_hooks.go:31-48)
-                fetched = fetched.withColumn("hook_events", FT.hook_events_expr())
-            # RDD leaf, not .persist(): the fused union's expansion branch
-            # is attribute-deduped by the analyzer, after which the cached
-            # plan no longer matches and the branch recomputed selection +
-            # fetch + outcomes from scratch (see _cut_lazy). As a leaf, both
-            # branches — and the end-of-run output union — read the same
-            # once-computed blocks.
-            out = self._cut_lazy(FT.apply_outcomes(fetched, wave_ts))
-
-            # THE wave's single driver action (round 4; was 2 in r2/r3): the
-            # outcome aggregate and the expansion per-partition aggregate are
-            # unioned into one collect, so one job materializes selection +
-            # fetch + outcomes AND the candidate expansion — the two legs'
-            # stages overlap instead of paying two sequential job latencies.
-            done = out.filter(F.col("outcome") == "done")
-            parted, ex_agg = self._expand_plan(done, seen)
-            oc_agg = out.groupBy("outcome", "is_init").agg(F.count("*").alias("n"))
-            fused = oc_agg.select(
-                F.lit("oc").alias("_kind"), "outcome", "is_init", "n"
-            ).unionByName(
-                ex_agg.withColumn("_kind", F.lit("ex")),
-                allowMissingColumns=True,
-            )
-            # Bloom-tier delta maintenance as a THIRD branch of the fused
-            # action (round 5): once the tier is synced, each wave's fresh-key
-            # bitsets are aggregated over the expansion leaf and collected
-            # with the outcome/expansion stats — tier upkeep was a dedicated
-            # 1-3 s driver round-trip per wave (pure serial floor, and the
-            # main per-wave cost growth once the tier engages), now it
-            # overlaps the stages the wave already runs.
-            bloom_live = self.bloom is not None and getattr(self, "_bloom_synced", False)
-            if bloom_live:
-                bloom_agg = self.bloom.delta_agg_df(
-                    parted.filter(F.col("_fresh")).select("url_hash")
-                )
-                fused = fused.unionByName(
-                    bloom_agg.withColumn("_kind", F.lit("bloom")),
-                    allowMissingColumns=True,
-                )
-            if self._profile and wave == int(
-                os.environ.get("CRAWLSPARK_EXPLAIN_WAVE", "0")
-            ):
-                # plan-shape debugging: dump the wave's single fused action
-                print(f"=== fused plan, wave {wave} ===", flush=True)
-                fused.explain("formatted")
-            rows = self._retry_action(fused.collect)
-            oc_rows = [r for r in rows if r["_kind"] == "oc"]
-            ex_stats = [r for r in rows if r["_kind"] == "ex"]
-            if bloom_live:
-                self.bloom.merge_rows([r for r in rows if r["_kind"] == "bloom"])
-            by_outcome: dict[str, int] = {}
-            n_sched_init = n_retried_init = 0
-            for r in oc_rows:
-                by_outcome[r["outcome"]] = by_outcome.get(r["outcome"], 0) + r["n"]
-                if r["is_init"]:
-                    n_sched_init += r["n"]
-                    if r["outcome"] == "retry":
-                        n_retried_init += r["n"]
-            n_sched = sum(by_outcome.values())
-            self._tick("select+fetch+outcomes", wave)
-            if n_sched == 0:
-                wave_sel.unpersist()  # out/parted are RDD leaves — GC-cleaned
-                src = pending.filter("is_init") if init_phase else pending
+        st = self._resume(manifest) if manifest else self._admit(seeds)
+        while st.wave < self.cfg.max_waves and not st.stopped:
+            st.wave += 1
+            w = self._wave(st)
+            if w is None:
+                # nothing scheduled: fast-forward the virtual clock to the
+                # first eligible backoff (identical wave numbering: the
+                # oracle's intervening waves select nothing and emit nothing)
+                src = st.pending.filter("is_init") if st.n_init_pending > 0 else st.pending
                 nxt = src.agg(F.min("not_before_us").alias("m")).collect()[0]["m"]
                 if nxt is None:
                     break  # frontier empty — fixpoint (inactivity-exit analog)
-                # fast-forward the virtual clock to the first eligible backoff
-                # (identical wave numbering: the oracle's intervening waves
-                # select nothing and emit nothing)
-                wave = max(wave, -(-int(nxt) // cfg.wave_period_us) - 1)
+                st.wave = max(st.wave, -(-int(nxt) // self.cfg.wave_period_us) - 1)
                 continue
-
-            # broadcast hint, not AQE-discovered: wave_sel is ≤ wave_budget
-            # rows (driver-bounded), while `eligible` is the frontier — a
-            # sort-merge anti-join would shuffle the whole frontier on
-            # job_id every wave. The hint also keeps the join broadcast
-            # inside the frontier snapshot's statically-compiled cut
-            # (keep_layout below), where AQE isn't around to discover it.
-            leftover = eligible.join(
-                F.broadcast(wave_sel.select("job_id")), "job_id", "left_anti"
-            )
-
-            n_done = by_outcome.get("done", 0)
-            n_failed = by_outcome.get("failed", 0) + by_outcome.get("stop", 0)
-            n_retried = by_outcome.get("retry", 0)
-            stopped = by_outcome.get("stop", 0) > 0
-
-            order_df = out.select(
-                F.lit(wave).cast("int").alias("wave"),
-                F.col("rank").cast("long").alias("rank"),
-                "job_id", "url_canon", "is_init",
-            )
-            responses_df = done.select(
-                "cache_key", "status", "body_image_id", "out_links", "latency_us"
-            )
-            if self.io:
-                responses_df = self._materialize(responses_df, "responses", wave)
-            responses_parts.append(responses_df)
-            # O-1 result-emit gate (scrapemate.go:585-591) + F-5 init results
-            # discarded (scrapemate.go:489-523) + P-2 per-type emit (a collect
-            # job's Process returns nil data): caching/expansion above are NOT
-            # gated — only the results stream is
-            results_df = self._build_results(
-                done.filter(
-                    F.col("use_in_results")
-                    & ~F.col("is_init")
-                    & jobtypes.emit_result_expr(self.specs, F.col("job_type"))
-                ),
-                wave,
-            )
-            terminal_df = out.filter(F.col("outcome").isin("done", "failed", "stop")).select(
-                "job_id", "url_canon", "attempts",
-                F.when(F.col("outcome") == "done", C.ST_DONE)
-                .otherwise(C.ST_FAILED)
-                .alias("final_state"),
-                F.lit(wave).cast("int").alias("wave"),
-            )
-
-            (admitted, n_allowed, seen_delta, blocked_term,
-             n_candidates, n_new, n_allowed_init) = (
-                self._expand_finish(parted, ex_stats, wave, wave_ts, seq_base)
-            )
-            self._tick("expand", wave)
-            # Both cuts compile statically (keep_layout): under AQE,
-            # localCheckpoint(eager=False) materializes the cut's non-final
-            # query stages at COMPILE time — ~2 s of serial driver floor per
-            # wave on frames whose downstream is unions and explicitly-
-            # hinted joins only, i.e. nothing AQE's runtime stats would
-            # re-plan (profile: the mat-pending leg, 10 jobs/wave).
-            admitted = self._materialize(admitted, "admitted", wave, keep_layout=True)
-            # narrow each seen delta before it enters the probe-side union
-            # chain: a delta holds ≤ one wave's fresh keys (≪ the full seen
-            # set the shuffle width is sized for), yet at full width the
-            # chain grows the seen-probe stage by n_shuffle tasks per wave
-            # between compactions (event-log profile: +64 tasks/wave). A
-            # coalesce is width-only — no exchange; the upstream reads the
-            # already-persisted expansion frame — and cuts the leak 8×.
-            seen_delta = self._materialize(
-                seen_delta.coalesce(max(1, self._n_shuffle // 8)),
-                "seen", wave, keep_layout=True,
-            )
-            self._seen_rows += n_new
-            seq_base += n_allowed
-            n_init_pending = n_init_pending - n_sched_init + n_retried_init + n_allowed_init
-
-            retried = out.filter(F.col("outcome") == "retry").select(*PENDING_COLS)
-            # width-only narrowing of the union branches (round 6 second
-            # pass): each branch is a filter over a 64-partition leaf, so the
-            # snapshot repartition's MAP side otherwise runs 4×n_shuffle
-            # tiny tasks per wave (~40 rows each — event-log: a 256-task
-            # 0.9 s stage that is mostly scheduling). coalesce is exchange-
-            # free and value-preserving; ≤ a wave's rows keep ample
-            # parallelism at n_shuffle/4 per branch.
-            nbq = max(1, self._n_shuffle // 4)
-            new_pending = (
-                future.coalesce(nbq)
-                .unionByName(leftover.coalesce(nbq))
-                .unionByName(retried.coalesce(nbq))
-                .unionByName(admitted.coalesce(nbq))
-            )
-            # re-bucket + sort the frontier snapshot: without this the union
-            # chain inflates partition counts O(waves²); with it the next
-            # wave's host window reads host-clustered, (priority, seq)-sorted
-            # runs (SURVEY.md §4.4 sorted-partition layout)
-            new_pending = new_pending.repartition(
-                self._n_shuffle, "host_bucket"
-            ).sortWithinPartitions("priority", "seq")
-            pending = self._materialize(new_pending, "pending", wave, keep_layout=True)
-            self._tick("mat-pending", wave)
-            seen = seen.unionByName(seen_delta)  # both sides already materialized
-            self._bloom_maintain(seen, seen_delta)
-            self._seen_chain += 1
-            if self._seen_chain >= 8:
-                # periodic compaction (the Nutch CrawlDb-merge analog): bound
-                # the delta chain so anti-join scan width stays O(P), not O(waves)
-                seen = self._materialize(
-                    seen.repartition(self._n_shuffle, "url_hash"), "seen_full", wave
-                )
-                self._seen_chain = 0
-            self._tick("bloom", wave)
-
-            # wave outputs stay LAZY over the persisted `out`/`cand` frames in
-            # memory mode (one final union at end-of-run); durable mode writes
-            # them now so a resume can replay committed waves.
-            terminal_df = terminal_df.unionByName(blocked_term)
-            if self.io:
-                order_df = self._materialize(order_df, "order", wave)
-                results_df = self._materialize(results_df, "results", wave)
-                terminal_df = self._materialize(terminal_df, "terminal", wave)
-            else:
-                # narrow the per-wave results frame before it enters the
-                # end-of-run union (round 6): each wave's results plan holds
-                # ≤ one wave's rows yet inherits the full n_shuffle width
-                # from the `out` leaf, so the union's consuming action ran
-                # waves × n_shuffle pandas-UDF tasks of ~10² rows each —
-                # per-task Arrow/worker overhead dominated the validate
-                # kernel ~10× (event-log profile: 512 tasks, 190 core-s for
-                # ~20 core-s of kernel). A coalesce is width-only (no
-                # exchange, rows and values unchanged); durable mode already
-                # writes compacted parquet instead.
-                results_df = results_df.coalesce(max(1, self._n_shuffle // 8))
-            order_parts.append(order_df)
-            results_parts.append(results_df)
-            terminal_parts.append(terminal_df)
-
-            # arithmetic identity — no action: the new frontier is exactly
-            # (previous pending − selected) ∪ retried ∪ admitted
-            n_pending_after = n_pending - n_sched + n_retried + n_allowed
-            n_pending = n_pending_after
-            metrics.append(
-                {
-                    "wave": wave,
-                    "scheduled": n_sched,
-                    "completed": n_done,
-                    "failed": n_failed,
-                    "retried": n_retried,
-                    "new_urls": n_new,
-                    "deduped": n_candidates - n_new,
-                    "pending_after": n_pending_after,
-                    "wall_sec": round(time.monotonic() - wt0, 3),
-                }
-            )
-            if self.io:
-                self.io.commit_manifest(
-                    {
-                        "wave": wave,
-                        "seq_base": seq_base,
-                        "stopped": stopped,
-                        "metrics": metrics,
-                        "n_pending": n_pending,
-                        "n_init_pending": n_init_pending,
-                    }
-                )
-                wave_sel.unpersist()  # out/parted are RDD leaves — GC-cleaned
-            # memory mode: `out`/`cand` stay cached — the end-of-run union of
-            # wave outputs reads them instead of recomputing the whole wave
-            if n_pending_after == 0:
+            self._commit(st, w)
+            if st.n_pending == 0:
                 break
+        return self._outputs(st)
+
+    # ------------------------------------------------------------------ #
+    def _admit(self, seeds: DataFrame) -> _Loop:
+        """Fresh start: admit the seeds as wave 0's frontier, seen set and
+        robots-blocked terminal rows, and commit wave 0."""
+        pending, seen_delta, blocked_term = self._admit_seeds(seeds)
+        # wave-0 snapshot gets the same stored layout as every later
+        # wave's (host-bucketed, sorted) so wave 1's politeness windows
+        # ride it exchange-free too
+        pending = self._materialize(
+            pending.repartition(self._n_shuffle, "host_bucket")
+            .sortWithinPartitions("priority", "seq"),
+            "pending", 0, keep_layout=True,
+        )
+        seen = self._materialize(seen_delta, "seen", 0)
+        blocked_term = self._materialize(blocked_term, "terminal", 0)
+        # ONE setup action (round 6 second pass; was three sequential
+        # driver round-trips: the seed-rank collect inside _admit_seeds,
+        # an is_init count, and seen.count()): the pending stats and the
+        # seen count ride a single fused collect — the same union-by-
+        # _kind shape as the per-wave fused action, so both lazy
+        # checkpoint cuts materialize inside one job's stages too.
+        fused0 = pending.agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("is_init").cast("long")).alias("n_init"),
+        ).select(F.lit("p").alias("_kind"), "n", "n_init").unionByName(
+            seen.agg(F.count("*").alias("n")).select(
+                F.lit("s").alias("_kind"), "n"
+            ),
+            allowMissingColumns=True,
+        )
+        srows = {r["_kind"]: r for r in self._retry_action(fused0.collect)}
+        n_seed_allowed = int(srows["p"]["n"])
+        st = _Loop(
+            pending=pending, seen=seen, wave=0,
+            seq_base=n_seed_allowed, n_pending=n_seed_allowed,
+            # how many seeds open an init BFS phase (F-5, scrapemate.go:489-523)
+            n_init_pending=int(srows["p"]["n_init"] or 0),
+        )
+        st.parts["terminal"].append(blocked_term)
+        self._seen_rows = int(srows["s"]["n"])
+        self._bloom_maintain(seen)
+        if self.io:
+            self.io.commit_manifest(
+                {"wave": 0, "seq_base": st.seq_base, "stopped": False,
+                 "metrics": [], "n_pending": st.n_pending,
+                 "n_init_pending": st.n_init_pending}
+            )
+        return st
+
+    def _resume(self, manifest: dict) -> _Loop:
+        """Restart after the manifest's wave: its frontier snapshot, the
+        committed seen waves, and every committed wave's outputs."""
+        wave = manifest["wave"]
+        pending = self.io.read_waves("pending", [wave], schema=None)
+        seen = self.io.read_waves(
+            "seen", list(range(0, wave + 1)), schema=SEEN_TBL_SCHEMA
+        )
+        parts = {t: [] for t in _OUTPUT_TABLES}
+        for w0 in range(0, wave + 1):
+            for tbl in ("order", "results", "terminal"):
+                if self.io.wave_exists(tbl, w0):
+                    parts[tbl].append(self.io.read_wave(tbl, w0))
+        self._seen_rows = seen.count()
+        n_pending = manifest.get("n_pending")
+        if n_pending is None:  # pre-round-2 manifest — one-time fallback
+            n_pending = pending.count()
+        n_init_pending = manifest.get("n_init_pending")
+        if n_init_pending is None:
+            n_init_pending = pending.filter("is_init").count() if "is_init" in pending.columns else 0
+        self._bloom_maintain(seen)  # rebuild tier from committed seen set
+        return _Loop(
+            pending=pending, seen=seen, wave=wave, seq_base=manifest["seq_base"],
+            n_pending=n_pending, n_init_pending=n_init_pending,
+            stopped=manifest["stopped"], resumed_from=wave,
+            metrics=list(manifest.get("metrics", [])), parts=parts,
+        )
+
+    # ------------------------------------------------------------------ #
+    def _wave(self, st: _Loop) -> _Wave | None:
+        """One wave up to its commit: eligible → politeness → selection →
+        fetch → outcomes → the wave's single fused action → expansion.
+        Advances the driver-side counters; returns None (with the
+        selection released) when the wave scheduled nothing."""
+        spark = self.spark
+        cfg = self.cfg
+        wave = st.wave
+        wave_ts = wave * cfg.wave_period_us
+        t_wave = time.monotonic()
+        # tag the wave's jobs (UI debuggability; also lets a profiler count
+        # scheduler round-trips per wave via statusTracker)
+        spark.sparkContext.setJobGroup(f"wave-{wave}", f"crawl wave {wave}")
+
+        # F-5 init phase: while any init job is pending, ONLY init jobs
+        # are eligible — the BFS-to-exhaustion-before-workers semantics
+        # of processInitJob (scrapemate.go:219-221, 489-523)
+        elig_cond = F.col("not_before_us") <= wave_ts
+        if st.n_init_pending > 0:
+            elig_cond = elig_cond & F.col("is_init")
+        eligible = st.pending.filter(elig_cond)
+        future = st.pending.filter(~elig_cond)
+
+        polite = politeness.per_host_topk(
+            eligible, self.budgets, cfg.default_host_budget, cfg.salt_buckets
+        )
+        # Selection-rank bucket from driver-tracked seq watermarks
+        # (frontier.with_inspark_rank_bucketed): seqs are assigned
+        # densely in [0, seq_base) and completion drains mostly from the
+        # front, so pending seqs concentrate in roughly the top
+        # n_pending of the space. An equal-slice map of
+        # [seq_base − n_pending, seq_base) is near-uniform there;
+        # stragglers below the watermark (out-of-order completions,
+        # retries) clamp into bucket 0 — a balance wobble, never an
+        # ordering error (the bucket stays monotone in seq).
+        nb_sel = self._n_shuffle
+        seq_lo = max(0, st.seq_base - max(1, st.n_pending))
+        seq_span = max(1, st.seq_base - seq_lo)
+        seq_bucket = F.greatest(
+            F.least(
+                ((F.col("seq") - F.lit(seq_lo)) * F.lit(nb_sel) / F.lit(seq_span)).cast("int"),
+                F.lit(nb_sel - 1),
+            ),
+            F.lit(0),
+        )
+        wave_sel = frontier.select_wave(
+            polite, cfg.wave_budget, seq_bucket=seq_bucket,
+            materialize=self._cut_lazy,
+        )
+        if cfg.fetch_profile:
+            # F-23: profile headers merged under the job's own
+            from crawlspark import stealth
+
+            wave_sel = stealth.with_profile_headers(
+                wave_sel, spark, cfg.fetch_profile
+            )
+        wave_sel = wave_sel.persist()
+        fetched = FT.fetch_simulate(
+            wave_sel, self.pages, self.response_cache,
+            carry_body_html=cfg.extract_links_from_body,
+            carry_body_gz=cfg.decode_gzip_body,
+            carry_js_links=(cfg.fetcher == "js"),
+        )
+        if cfg.extract_links_from_body and "body_html" in fetched.columns:
+            # P-3 link extraction from the response body. Default: the
+            # every-anchor Catalyst regexp (no UDF). Job types that
+            # declare link_selectors (round 4) instead get their links
+            # from the CSS-selector engine (crawlspark/selectors.py —
+            # the goquery Find().Attr() analog, Arrow-batched); types
+            # without selectors fall back via coalesce, so the
+            # zero-config path stays pure Catalyst. Cache hits keep
+            # their stored out_links (extracted when the response was
+            # first fetched); body is dropped immediately so HTML never
+            # enters the persisted wave state.
+            anchor_links = F.regexp_extract_all(
+                F.col("body_html"), F.lit(r'<a href="([^"]+)"'), 1
+            )
+            sel_types = {
+                t: s.link_selectors
+                for t, s in self.specs.items()
+                if getattr(s, "link_selectors", ())
+            }
+            if sel_types:
+                from crawlspark import selectors as SEL
+
+                extracted = F.coalesce(
+                    SEL.links_by_type_udf(sel_types)(
+                        F.col("job_type"), F.col("body_html")
+                    ),
+                    anchor_links,
+                )
+            else:
+                extracted = anchor_links
+            fetched = fetched.withColumn(
+                "out_links",
+                F.when(
+                    ~F.col("from_cache") & F.col("body_html").isNotNull(),
+                    extracted,
+                ).otherwise(F.col("out_links")),
+            ).drop("body_html")
+        if cfg.fetcher == "js" and "js_links" in fetched.columns:
+            # F-24: the js fetcher also observes render-injected links,
+            # appended after the static ones (document order, then render
+            # order). Cache hits keep their stored (already-effective) links.
+            fetched = fetched.withColumn(
+                "out_links",
+                F.when(
+                    F.col("from_cache"), F.col("out_links")
+                ).otherwise(
+                    F.concat(
+                        F.coalesce(F.col("out_links"), F.array().cast("array<string>")),
+                        F.coalesce(F.col("js_links"), F.array().cast("array<string>")),
+                    )
+                ),
+            ).drop("js_links")
+        if cfg.decode_gzip_body and "body_gz" in fetched.columns:
+            # F-11 transparent gzip decode (nethttp.go:76-86); the raw
+            # gz bytes are dropped so only the text enters the wave cache
+            fetched = fetched.withColumn(
+                "body_text",
+                F.when(~F.col("from_cache"), FT.gunzip_udf()(F.col("body_gz"))),
+            ).drop("body_gz")
+        if cfg.enable_hooks:
+            # F-29 hooks side-output (request_hooks.go:31-48)
+            fetched = fetched.withColumn("hook_events", FT.hook_events_expr())
+        # RDD leaf, not .persist(): the fused union's expansion branch
+        # is attribute-deduped by the analyzer, after which the cached
+        # plan no longer matches and the branch recomputed selection +
+        # fetch + outcomes from scratch (see _cut_lazy). As a leaf, both
+        # branches — and the end-of-run output union — read the same
+        # once-computed blocks.
+        out = self._cut_lazy(FT.apply_outcomes(fetched, wave_ts))
+
+        # THE wave's single driver action (round 4; was 2 in r2/r3): the
+        # outcome aggregate and the expansion per-partition aggregate are
+        # unioned into one collect, so one job materializes selection +
+        # fetch + outcomes AND the candidate expansion — the two legs'
+        # stages overlap instead of paying two sequential job latencies.
+        done = out.filter(F.col("outcome") == "done")
+        parted, ex_agg = self._expand_plan(done, st.seen)
+        oc_agg = out.groupBy("outcome", "is_init").agg(F.count("*").alias("n"))
+        fused = oc_agg.select(
+            F.lit("oc").alias("_kind"), "outcome", "is_init", "n"
+        ).unionByName(
+            ex_agg.withColumn("_kind", F.lit("ex")),
+            allowMissingColumns=True,
+        )
+        # Bloom-tier delta maintenance as a THIRD branch of the fused
+        # action (round 5): once the tier is synced, each wave's fresh-key
+        # bitsets are aggregated over the expansion leaf and collected
+        # with the outcome/expansion stats — tier upkeep was a dedicated
+        # 1-3 s driver round-trip per wave (pure serial floor, and the
+        # main per-wave cost growth once the tier engages), now it
+        # overlaps the stages the wave already runs.
+        bloom_live = self._bloom_synced
+        if bloom_live:
+            bloom_agg = self.bloom.delta_agg_df(
+                parted.filter(F.col("_fresh")).select("url_hash")
+            )
+            fused = fused.unionByName(
+                bloom_agg.withColumn("_kind", F.lit("bloom")),
+                allowMissingColumns=True,
+            )
+        rows = self._retry_action(fused.collect)
+        oc_rows = [r for r in rows if r["_kind"] == "oc"]
+        ex_stats = [r for r in rows if r["_kind"] == "ex"]
+        if bloom_live:
+            self.bloom.merge_rows([r for r in rows if r["_kind"] == "bloom"])
+        by_outcome: dict[str, int] = {}
+        n_sched_init = n_retried_init = 0
+        for r in oc_rows:
+            by_outcome[r["outcome"]] = by_outcome.get(r["outcome"], 0) + r["n"]
+            if r["is_init"]:
+                n_sched_init += r["n"]
+                if r["outcome"] == "retry":
+                    n_retried_init += r["n"]
+        n_sched = sum(by_outcome.values())
+        t_expand = time.monotonic()
+        if n_sched == 0:
+            wave_sel.unpersist()  # out/parted are RDD leaves — GC-cleaned
+            return None
+
+        # broadcast hint, not AQE-discovered: wave_sel is ≤ wave_budget
+        # rows (driver-bounded), while `eligible` is the frontier — a
+        # sort-merge anti-join would shuffle the whole frontier on
+        # job_id every wave. The hint also keeps the join broadcast
+        # inside the frontier snapshot's statically-compiled cut
+        # (keep_layout in _commit), where AQE isn't around to discover it.
+        leftover = eligible.join(
+            F.broadcast(wave_sel.select("job_id")), "job_id", "left_anti"
+        )
+        st.stopped = by_outcome.get("stop", 0) > 0
+
+        order_df = out.select(
+            F.lit(wave).cast("int").alias("wave"),
+            F.col("rank").cast("long").alias("rank"),
+            "job_id", "url_canon", "is_init",
+        )
+        responses_df = done.select(
+            "cache_key", "status", "body_image_id", "out_links", "latency_us"
+        )
+        if self.io:
+            responses_df = self._materialize(responses_df, "responses", wave)
+        st.parts["responses"].append(responses_df)
+        # O-1 result-emit gate (scrapemate.go:585-591) + F-5 init results
+        # discarded (scrapemate.go:489-523) + P-2 per-type emit (a collect
+        # job's Process returns nil data): caching/expansion above are NOT
+        # gated — only the results stream is
+        results_df = self._build_results(
+            done.filter(
+                F.col("use_in_results")
+                & ~F.col("is_init")
+                & jobtypes.emit_result_expr(self.specs, F.col("job_type"))
+            ),
+            wave,
+        )
+        terminal_df = out.filter(F.col("outcome").isin("done", "failed", "stop")).select(
+            "job_id", "url_canon", "attempts",
+            F.when(F.col("outcome") == "done", C.ST_DONE)
+            .otherwise(C.ST_FAILED)
+            .alias("final_state"),
+            F.lit(wave).cast("int").alias("wave"),
+        )
+
+        (admitted, n_allowed, seen_delta, blocked_term,
+         n_candidates, n_new, n_allowed_init) = (
+            self._expand_finish(parted, ex_stats, wave, wave_ts, st.seq_base)
+        )
+        self._seen_rows += n_new
+        st.seq_base += n_allowed
+        st.n_init_pending += n_allowed_init + n_retried_init - n_sched_init
+        # arithmetic identity — no action: the new frontier is exactly
+        # (previous pending − selected) ∪ retried ∪ admitted
+        n_retried = by_outcome.get("retry", 0)
+        st.n_pending += n_retried + n_allowed - n_sched
+        return _Wave(
+            sel=wave_sel, future=future, leftover=leftover,
+            retried=out.filter(F.col("outcome") == "retry").select(*PENDING_COLS),
+            admitted=admitted, seen_delta=seen_delta,
+            order=order_df, results=results_df,
+            terminal=terminal_df.unionByName(blocked_term),
+            metrics={
+                "wave": wave,
+                "scheduled": n_sched,
+                "completed": by_outcome.get("done", 0),
+                "failed": by_outcome.get("failed", 0) + by_outcome.get("stop", 0),
+                "retried": n_retried,
+                "new_urls": n_new,
+                "deduped": n_candidates - n_new,
+                "pending_after": st.n_pending,
+            },
+            stamps=(t_wave, t_expand, time.monotonic()),
+        )
+
+    def _commit(self, st: _Loop, w: _Wave) -> None:
+        """Cut the wave's admitted rows, seen delta and frontier snapshot,
+        fold the delta into the seen set, keep the bloom tier up, record the
+        wave's outputs and metrics, and commit the manifest."""
+        wave = st.wave
+        # Both cuts compile statically (keep_layout): under AQE,
+        # localCheckpoint(eager=False) materializes the cut's non-final
+        # query stages at COMPILE time — ~2 s of serial driver floor per
+        # wave on frames whose downstream is unions and explicitly-
+        # hinted joins only, i.e. nothing AQE's runtime stats would
+        # re-plan (profile: the mat-pending leg, 10 jobs/wave).
+        admitted = self._materialize(w.admitted, "admitted", wave, keep_layout=True)
+        # narrow each seen delta before it enters the probe-side union
+        # chain: a delta holds ≤ one wave's fresh keys (≪ the full seen
+        # set the shuffle width is sized for), yet at full width the
+        # chain grows the seen-probe stage by n_shuffle tasks per wave
+        # between compactions (event-log profile: +64 tasks/wave). A
+        # coalesce is width-only — no exchange; the upstream reads the
+        # already-persisted expansion frame — and cuts the leak 8×.
+        seen_delta = self._materialize(
+            w.seen_delta.coalesce(max(1, self._n_shuffle // 8)),
+            "seen", wave, keep_layout=True,
+        )
+        # width-only narrowing of the union branches (round 6 second
+        # pass): each branch is a filter over a 64-partition leaf, so the
+        # snapshot repartition's MAP side otherwise runs 4×n_shuffle
+        # tiny tasks per wave (~40 rows each — event-log: a 256-task
+        # 0.9 s stage that is mostly scheduling). coalesce is exchange-
+        # free and value-preserving; ≤ a wave's rows keep ample
+        # parallelism at n_shuffle/4 per branch.
+        nbq = max(1, self._n_shuffle // 4)
+        new_pending = (
+            w.future.coalesce(nbq)
+            .unionByName(w.leftover.coalesce(nbq))
+            .unionByName(w.retried.coalesce(nbq))
+            .unionByName(admitted.coalesce(nbq))
+        )
+        # re-bucket + sort the frontier snapshot: without this the union
+        # chain inflates partition counts O(waves²); with it the next
+        # wave's host window reads host-clustered, (priority, seq)-sorted
+        # runs (SURVEY.md §4.4 sorted-partition layout)
+        new_pending = new_pending.repartition(
+            self._n_shuffle, "host_bucket"
+        ).sortWithinPartitions("priority", "seq")
+        st.pending = self._materialize(new_pending, "pending", wave, keep_layout=True)
+        st.seen = st.seen.unionByName(seen_delta)  # both sides already materialized
+        self._bloom_maintain(st.seen)
+        self._seen_chain += 1
+        if self._seen_chain >= 8:
+            # periodic compaction (the Nutch CrawlDb-merge analog): bound
+            # the delta chain so anti-join scan width stays O(P), not O(waves)
+            st.seen = self._materialize(
+                st.seen.repartition(self._n_shuffle, "url_hash"), "seen_full", wave
+            )
+            self._seen_chain = 0
+
+        # wave outputs stay LAZY over the persisted `out`/`cand` frames in
+        # memory mode (one final union at end-of-run); durable mode writes
+        # them now so a resume can replay committed waves.
+        order_df, results_df, terminal_df = w.order, w.results, w.terminal
+        if self.io:
+            order_df = self._materialize(order_df, "order", wave)
+            results_df = self._materialize(results_df, "results", wave)
+            terminal_df = self._materialize(terminal_df, "terminal", wave)
+        else:
+            # narrow the per-wave results frame before it enters the
+            # end-of-run union (round 6): each wave's results plan holds
+            # ≤ one wave's rows yet inherits the full n_shuffle width
+            # from the `out` leaf, so the union's consuming action ran
+            # waves × n_shuffle pandas-UDF tasks of ~10² rows each —
+            # per-task Arrow/worker overhead dominated the validate
+            # kernel ~10× (event-log profile: 512 tasks, 190 core-s for
+            # ~20 core-s of kernel). A coalesce is width-only (no
+            # exchange, rows and values unchanged); durable mode already
+            # writes compacted parquet instead.
+            results_df = results_df.coalesce(max(1, self._n_shuffle // 8))
+        st.parts["order"].append(order_df)
+        st.parts["results"].append(results_df)
+        st.parts["terminal"].append(terminal_df)
+
+        t_wave, t_expand, t_commit = w.stamps
+        t_end = time.monotonic()
+        st.metrics.append({
+            **w.metrics,
+            "wall_sec": round(t_end - t_wave, 3),
+            "phases": {
+                "wave": round(t_expand - t_wave, 3),
+                "expand": round(t_commit - t_expand, 3),
+                "commit": round(t_end - t_commit, 3),
+            },
+        })
+        if self.io:
+            self.io.commit_manifest(
+                {"wave": wave, "seq_base": st.seq_base, "stopped": st.stopped,
+                 "metrics": st.metrics, "n_pending": st.n_pending,
+                 "n_init_pending": st.n_init_pending}
+            )
+            w.sel.unpersist()  # out/parted are RDD leaves — GC-cleaned
+        # memory mode: `out`/`cand` stay cached — the end-of-run union of
+        # wave outputs reads them instead of recomputing the whole wave
+
+    def _outputs(self, st: _Loop) -> CrawlRun:
+        """The end-of-run unions of every wave's outputs (lazy)."""
 
         def _union(parts, schema):
             if not parts:
-                return spark.createDataFrame([], schema)
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df
+                return self.spark.createDataFrame([], schema)
+            return reduce(DataFrame.unionByName, parts)
 
         return CrawlRun(
-            responses=_union(responses_parts, RESPONSES_SCHEMA),
-            order=_union(order_parts, ORDER_SCHEMA),
-            results=_union(
-                results_parts,
-                "job_id string, parent_id string, url_canon string, wave int, rank int, "
-                "status int, attempts int, from_cache boolean, image_id string, "
-                "latency_us long, caption string, phash long, psnr_db double, pixels_ok boolean",
-            ),
-            terminal=_union(terminal_parts, TERMINAL_SCHEMA),
-            seen=seen,
-            metrics=metrics,
-            waves=wave,
-            stopped=stopped,
-            resumed_from_wave=resumed_from,
+            responses=_union(st.parts["responses"], RESPONSES_SCHEMA),
+            order=_union(st.parts["order"], ORDER_SCHEMA),
+            results=_union(st.parts["results"], RESULTS_SCHEMA),
+            terminal=_union(st.parts["terminal"], TERMINAL_SCHEMA),
+            seen=st.seen,
+            metrics=st.metrics,
+            waves=st.wave,
+            stopped=st.stopped,
+            resumed_from_wave=st.resumed_from,
         )

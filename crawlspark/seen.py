@@ -1,24 +1,23 @@
-"""URL-seen set: exact anti-join authority + bloom/cuckoo probabilistic tiers.
+"""URL-seen set: exact anti-join authority + a bloom probabilistic tier.
 
 Reference analog: the response cache doubling as fetch-dedup — `Cacher`
 (services.go:37-41) keyed by md5(method:fullURL[+body]) (job.go:117-130).
-The engine keeps that exact key (cache_key) as the dedup authority and adds
-the north-rule tiers keyed by xxhash64(url_canon):
+The engine keeps that exact key (cache_key) as the dedup authority and puts
+the north-rule bloom tier, keyed by xxhash64(url_canon), in front of it:
 
   tier 1 — partitioned Bloom filters (immutable, historical): one bitset per
            pmod(url_hash, P) range, built distributed via applyInPandas,
            OR-merged across waves. At 10^10 keys the per-partition bitsets
            stay bounded (P scales with the frontier) and membership probes
            broadcast only the bitsets, never the keys.
-  tier 2 — cuckoo overflow (small, mutable, recent): holds keys added since
-           the last bloom rebuild; supports deletion, so a wave that aborts
-           before its manifest commit can release its speculative keys.
-           Bounded by rebuild_interval × wave_budget fingerprints → always
-           broadcastable.
-  tier 3 — exact left-anti join on cache_key: the authority. The filters
-           only cut the join's left side (a candidate flagged definitely-new
-           by both tiers skips the shuffle entirely); they can never change
-           the answer.
+  tier 2 — exact left join on cache_key: the authority. The bloom only cuts
+           the join's left side (a candidate it flags definitely-new skips
+           the shuffle entirely); it can never change the answer.
+
+The seen set is append-only (the reference's cache keys never expire), and a
+wave that aborts before its manifest commit is invisible to resume, which
+reads only committed seen waves and rebuilds the bloom from them — so no tier
+needs deletion.
 """
 
 from __future__ import annotations
@@ -130,111 +129,16 @@ class PartitionedBloom:
         return o
 
 
-class CuckooFilter:
-    """Bucketized cuckoo filter (4 slots/bucket, 16-bit fingerprints).
-
-    Supports delete — the property blooms lack — so speculative keys from an
-    uncommitted wave can be released on abort (SURVEY.md §4.3.2).
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int = 1 << 14, seed: int = 7):
-        self.n_buckets = n_buckets
-        self.table = np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)
-        self.rng = np.random.Generator(np.random.PCG64(seed))
-        self.count = 0
-
-    def _fp(self, h: int) -> int:
-        fp = (h ^ (h >> 17) ^ (h >> 33)) & 0xFFFF
-        return fp if fp != 0 else 1
-
-    def _idx(self, h: int) -> int:
-        return (h >> 16) % self.n_buckets
-
-    def _alt(self, i: int, fp: int) -> int:
-        return (i ^ (fp * 0x5BD1E995)) % self.n_buckets
-
-    def insert(self, h: int) -> bool:
-        fp = self._fp(h)
-        i1 = self._idx(h)
-        i2 = self._alt(i1, fp)
-        for i in (i1, i2):
-            row = self.table[i]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                self.count += 1
-                return True
-        i = int(self.rng.choice([i1, i2]))
-        for _ in range(self.MAX_KICKS):
-            slot = int(self.rng.integers(0, self.SLOTS))
-            fp, self.table[i][slot] = int(self.table[i][slot]), fp
-            i = self._alt(i, fp)
-            row = self.table[i]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                self.count += 1
-                return True
-        return False  # table full — caller should trigger a bloom rebuild
-
-    def contains(self, h: int) -> bool:
-        fp = self._fp(h)
-        i1 = self._idx(h)
-        i2 = self._alt(i1, fp)
-        return bool((self.table[i1] == fp).any() or (self.table[i2] == fp).any())
-
-    def contains_many(self, hashes: np.ndarray) -> np.ndarray:
-        """Vectorized twin of `contains` (round 6 — the scalar fromiter loop
-        sat one `mark_seen(..., cuckoo=ck)` call away from the hot probe
-        path, inside the same mapInPandas the bloom probe was vectorized
-        for). Fingerprint, bucket and alt-bucket are pure integer ops with
-        the same arithmetic-shift / floor-mod semantics as the scalar path
-        (int64 two's-complement low bits == Python int low bits), then two
-        row gathers over the bucket table. Bit-identical by test pin."""
-        if len(hashes) == 0:
-            return np.zeros(0, dtype=bool)
-        h = hashes.astype(np.int64)
-        fp = (h ^ (h >> np.int64(17)) ^ (h >> np.int64(33))) & np.int64(0xFFFF)
-        fp = np.where(fp == 0, np.int64(1), fp)
-        i1 = (h >> np.int64(16)) % self.n_buckets
-        i2 = (i1 ^ (fp * np.int64(0x5BD1E995))) % self.n_buckets
-        fpc = fp.astype(np.uint16)[:, None]
-        return (self.table[i1] == fpc).any(axis=1) | (
-            self.table[i2] == fpc
-        ).any(axis=1)
-
-    def delete(self, h: int) -> bool:
-        fp = self._fp(h)
-        i1 = self._idx(h)
-        for i in (i1, self._alt(i1, fp)):
-            hits = np.where(self.table[i] == fp)[0]
-            if len(hits):
-                self.table[i][hits[0]] = 0
-                self.count -= 1
-                return True
-        return False
-
-
 def prefilter_candidates(
     candidates: DataFrame,
-    bloom: PartitionedBloom | None,
-    cuckoo: CuckooFilter | None,
+    bloom: PartitionedBloom,
     hash_col: str = "url_hash",
 ) -> DataFrame:
     """Tag candidates with `maybe_seen`; False ⇒ definitely new (skip the
-    exact anti-join). Filters ship to executors as broadcast state inside a
-    mapInPandas closure — bitsets only, never the key sets."""
-    if bloom is None and cuckoo is None:
-        return candidates.withColumn("maybe_seen", F.lit(True))
-
+    exact anti-join). The bloom state ships to executors as a broadcast
+    inside a mapInPandas closure — bitsets only, never the key set."""
     spark = candidates.sparkSession
-    bstate = (bloom.state_bytes(), bloom.m_bits, bloom.k) if bloom else None
-    ctable = cuckoo.table.copy() if cuckoo else None
-    cbuckets = cuckoo.n_buckets if cuckoo else 0
-    bc = spark.sparkContext.broadcast((bstate, ctable, cbuckets))
+    bc = spark.sparkContext.broadcast((bloom.state_bytes(), bloom.m_bits, bloom.k))
     # StructType.add mutates in place — build a fresh copy for the output
     from pyspark.sql import types as T
 
@@ -245,24 +149,10 @@ def prefilter_candidates(
     hpos = names.index(hash_col)
 
     def check(batches):
-        state, ct, cb = bc.value
-        bl = (
-            PartitionedBloom.from_state(state[0], state[1], state[2])
-            if state
-            else None
-        )
-        ck = None
-        if ct is not None:
-            ck = CuckooFilter(n_buckets=cb)
-            ck.table = ct
+        bl = PartitionedBloom.from_state(*bc.value)
         for pdf in batches:
             h = pdf.iloc[:, hpos].to_numpy(np.int64)
-            maybe = np.zeros(len(pdf), dtype=bool)
-            if bl is not None:
-                maybe |= bl.might_contain(h)
-            if ck is not None:
-                maybe |= ck.contains_many(h)
-            yield pdf.assign(maybe_seen=maybe)
+            yield pdf.assign(maybe_seen=bl.might_contain(h))
 
     return candidates.mapInPandas(check, schema=out_schema)
 
@@ -271,26 +161,25 @@ def mark_seen(
     candidates: DataFrame,
     seen: DataFrame,
     bloom: PartitionedBloom | None = None,
-    cuckoo: CuckooFilter | None = None,
     key: str = "cache_key",
 ) -> DataFrame:
     """Row-preserving seen probe: adds a `_seen` boolean instead of dropping
     rows, so the caller can count candidates/fresh/admitted in ONE aggregate
-    action (the anti-join variant forces a separate count per subset).
+    action (an anti-join forces a separate count per subset).
 
     `seen` holds unique keys by construction — every wave's delta excludes
     prior keys and is first-occurrence-deduped within the wave — so the left
-    join is row-preserving. Tier semantics match dedup_against_seen: a
-    candidate flagged definitely-new by the probabilistic tiers skips the
-    exact join's shuffle entirely; the join stays the authority.
+    join is row-preserving. With a bloom tier, a candidate it flags
+    definitely-new skips the exact join's shuffle entirely; the join stays
+    the authority either way.
     """
     probe = seen.select(key).withColumn("_in_seen", F.lit(True))
-    tagged = prefilter_candidates(candidates, bloom, cuckoo)
-    if bloom is None and cuckoo is None:
-        joined = tagged.drop("maybe_seen").join(probe, key, "left")
+    if bloom is None:
+        joined = candidates.join(probe, key, "left")
         return joined.withColumn(
             "_seen", F.coalesce(F.col("_in_seen"), F.lit(False))
         ).drop("_in_seen")
+    tagged = prefilter_candidates(candidates, bloom)
     fresh_fast = (
         tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         .withColumn("_seen", F.lit(False))
@@ -300,25 +189,5 @@ def mark_seen(
         suspects.join(probe, key, "left")
         .withColumn("_seen", F.coalesce(F.col("_in_seen"), F.lit(False)))
         .drop("_in_seen")
-    )
-    return fresh_fast.unionByName(checked)
-
-
-def dedup_against_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom: PartitionedBloom | None = None,
-    cuckoo: CuckooFilter | None = None,
-) -> DataFrame:
-    """New-URL admission: probabilistic pre-filter, then exact left-anti join
-    on cache_key (md5 — the reference's dedup key, job.go:117-130).
-
-    Returns candidates that are NOT in `seen`. Exact regardless of tiers.
-    """
-    tagged = prefilter_candidates(candidates, bloom, cuckoo)
-    fresh_fast = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    checked = suspects.join(
-        seen.select("cache_key"), "cache_key", "left_anti"
     )
     return fresh_fast.unionByName(checked)

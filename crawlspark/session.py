@@ -43,7 +43,7 @@ def get_spark(
     # mmap+page-fault+munmap cycle, and the kernel's page zeroing doubles the
     # write traffic of an already bandwidth-bound phase. Raising the threshold
     # keeps those temps on the reusable heap: +38-40% on the payload kernel at
-    # BOTH 4 and 16 workers (bench/kernel_scaling.py). glibc reads the env at
+    # BOTH 4 and 16 workers (BENCH/BASELINE.md §2d, heap-reuse item 2). glibc reads the env at
     # process start, so set it before the gateway JVM (whose python daemons
     # inherit it) exists; executorEnv carries the same setting to a real
     # cluster's executors.

@@ -205,7 +205,7 @@ def dedup_stream(
     key wins across micro-batches (stateful dropDuplicates).
 
     Without `ts_col` the dedup state is global and exact — the semantics of
-    the batch seen-set (bloom+cuckoo+anti-join) as a continuous pipeline; at
+    the batch seen-set (bloom+anti-join) as a continuous pipeline; at
     10^10 keys pass `ts_col` so the watermark bounds state to the late-data
     horizon (`dropDuplicatesWithinWatermark`): keys older than `delay` are
     evicted, trading unbounded memory for at-most-once-per-horizon dedup —

@@ -1,20 +1,29 @@
-"""Pin the wave-checkpoint compilation default decided by the round-4 A/B.
+"""Every engine path that changes session SQL conf scopes it: the checkpoint
+cuts (`_materialize`, `_cut_lazy`) and the execution-mode switch
+(`exec_mode`) must leave AQE and the codegen confs exactly as they found
+them — also when the scoped body raises — and a cut keeps every row.
 
-The interleaved full-loop A/B (BENCH/ab_r4_ckpt.json: AQE-compiled won 4/4
-pairs, median B/A = 0.80) fixed the default at AQE-compiled lazy
-localCheckpoints; the static-compile arm survives only behind
-CRAWLSPARK_CKPT_STATIC=1 for re-measurement. These tests make the decision
-regression-proof: the default must NOT touch the session's AQE conf, the
-escape hatch must restore it, and both compile modes must produce the same
-crawl (the A/B measured wall time only because outputs are pinned equal).
+Inside the scope each path sees only its own setting: the default wave cut
+compiles under the session's AQE, layout-keeping and intra-wave cuts compile
+with AQE off, and below the wave-budget crossover the run plans in
+interpreted mode.
 """
-
-import os
 
 import pytest
 
 from crawlspark import synth
 from crawlspark.engine import CrawlConfig, CrawlEngine
+
+CONFS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.codegen.wholeStage",
+    "spark.sql.codegen.factoryMode",
+)
+AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
+INTERPRETED = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
 
 
 def _engine(spark, world, **cfg_kwargs):
@@ -24,8 +33,25 @@ def _engine(spark, world, **cfg_kwargs):
         robots=synth.robots_df(spark, world),
         budgets=synth.politeness_df(spark, world),
         images=None,
-        config=CrawlConfig(validate_images=False, **cfg_kwargs),
+        config=CrawlConfig(validate_images=False, wave_budget=30, **cfg_kwargs),
     )
+
+
+def _in_exec_mode(eng, df):
+    with eng.exec_mode():
+        return eng._materialize(df, "pending", 0)
+
+
+# case → (config overrides, the cut, confs in force while the cut compiles)
+CASES = {
+    "materialize": ({}, lambda eng, df: eng._materialize(df, "pending", 0), {}),
+    "materialize_keep_layout": (
+        {}, lambda eng, df: eng._materialize(df, "pending", 0, keep_layout=True), AQE_OFF,
+    ),
+    "cut_lazy": ({}, lambda eng, df: eng._cut_lazy(df), AQE_OFF),
+    "exec_mode_below_crossover": ({}, _in_exec_mode, INTERPRETED),
+    "exec_mode_above_crossover": ({"interpreted_below_wave_budget": 10}, _in_exec_mode, {}),
+}
 
 
 @pytest.fixture(scope="module")
@@ -33,40 +59,33 @@ def world():
     return synth.make_world(n_hosts=4, total_pages=60)
 
 
-def test_default_materialize_keeps_aqe_untouched(spark, world):
-    eng = _engine(spark, world, wave_budget=30)
-    assert eng._ckpt_static is False
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
+@pytest.mark.parametrize("case", list(CASES))
+def test_conf_scope_restores_session_conf(spark, world, monkeypatch, case):
+    overrides, cut, scoped = CASES[case]
+    eng = _engine(spark, world, **overrides)
     df = synth.seeds_df(spark, world)
-    cut = eng._materialize(df, "pending", 0)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == prev
-    assert cut.count() == df.count()
+    n_rows = df.count()
 
+    def confs():
+        return {k: spark.conf.get(k) for k in CONFS}
 
-def test_static_escape_hatch_restores_conf(spark, world, monkeypatch):
-    monkeypatch.setenv("CRAWLSPARK_CKPT_STATIC", "1")
-    eng = _engine(spark, world, wave_budget=30)
-    assert eng._ckpt_static is True
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    df = synth.seeds_df(spark, world)
-    cut = eng._materialize(df, "pending", 0)
-    # the static compile toggles AQE off only around the checkpoint call
-    assert spark.conf.get("spark.sql.adaptive.enabled") == prev
-    assert cut.count() == df.count()
+    before = confs()
+    compiled_under = []
+    real = type(df).localCheckpoint
+    for raises in (False, True):
 
+        def spy(self, *args, **kwargs):
+            compiled_under.append(confs())
+            if raises:
+                raise RuntimeError("injected checkpoint failure")
+            return real(self, *args, **kwargs)
 
-def test_both_compile_modes_same_crawl(spark, world, monkeypatch):
-    runs = {}
-    for static in (False, True):
-        if static:
-            monkeypatch.setenv("CRAWLSPARK_CKPT_STATIC", "1")
+        monkeypatch.setattr(type(df), "localCheckpoint", spy)
+        if raises:
+            with pytest.raises(RuntimeError, match="injected"):
+                cut(eng, df)
         else:
-            monkeypatch.delenv("CRAWLSPARK_CKPT_STATIC", raising=False)
-        eng = _engine(spark, world, wave_budget=25)
-        run = eng.run(synth.seeds_df(spark, world))
-        runs[static] = [
-            (r.wave, r.rank, r.job_id, r.url_canon)
-            for r in run.order.orderBy("wave", "rank").collect()
-        ]
-    assert runs[False] == runs[True]
-    monkeypatch.delenv("CRAWLSPARK_CKPT_STATIC", raising=False)
+            assert cut(eng, df).count() == n_rows
+        monkeypatch.undo()
+        assert confs() == before
+    assert compiled_under == [{**before, **scoped}] * 2

@@ -92,6 +92,15 @@ def test_metrics_match(small_run):
     assert got == golden.metrics
 
 
+def test_wave_phase_timings_account_for_wall(small_run):
+    run, _ = small_run
+    assert run.metrics
+    for m in run.metrics:
+        assert set(m["phases"]) == {"wave", "expand", "commit"}
+        assert all(s >= 0 for s in m["phases"].values())
+        assert abs(sum(m["phases"].values()) - m["wall_sec"]) <= 0.1 * m["wall_sec"]
+
+
 def test_tight_budget_changes_schedule_identically(spark):
     # politeness + global budget binding: both sides must agree under pressure
     world = synth.make_world(n_hosts=5, total_pages=60)

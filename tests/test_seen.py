@@ -1,8 +1,9 @@
-"""Seen-set tiers: partitioned bloom (no false negatives), cuckoo overflow
-(insert/contains/delete), and exactness of the tiered dedup vs plain anti-join
-with the prefilter FORCED on (the engine only engages it at scale)."""
+"""Seen-set tiers: partitioned bloom (no false negatives, low false-positive
+rate) and exactness of the bloom-prefiltered seen probe vs a plain join with
+the prefilter FORCED on (the engine only engages it at scale)."""
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from crawlspark import seen as SEEN
 
@@ -33,21 +34,6 @@ def test_bloom_distributed_build_matches(spark):
     assert bloom.might_contain(hashes).all()
 
 
-def test_cuckoo_filter_semantics():
-    ck = SEEN.CuckooFilter(n_buckets=1 << 10)
-    keys = list(range(1000, 2000))
-    for k in keys:
-        assert ck.insert(k)
-    assert all(ck.contains(k) for k in keys)
-    # deletion — the property blooms lack (releases speculative wave keys)
-    for k in keys[:100]:
-        assert ck.delete(k)
-    assert sum(ck.contains(k) for k in keys[:100]) <= 5  # fp collisions only
-    assert all(ck.contains(k) for k in keys[100:])
-    fp = sum(ck.contains(k) for k in range(50_000, 55_000)) / 5000
-    assert fp < 0.05, fp
-
-
 def test_tiered_dedup_exact_vs_plain_anti_join(spark):
     cand = spark.range(0, 3000).selectExpr(
         "xxhash64(cast(id as string)) AS url_hash",
@@ -60,33 +46,18 @@ def test_tiered_dedup_exact_vs_plain_anti_join(spark):
     )
     bloom = SEEN.PartitionedBloom(n_partitions=4, m_bits=1 << 16, k=5)
     bloom.add_from_df(seen)
-    cuckoo = SEEN.CuckooFilter(1 << 12)
-    tiered = SEEN.dedup_against_seen(cand, seen, bloom, cuckoo)
-    plain = cand.join(seen.select("cache_key"), "cache_key", "left_anti")
-    got = sorted(r.id for r in tiered.collect())
-    want = sorted(r.id for r in plain.collect())
-    assert got == want  # tiers can never change the answer
-    assert len(got) == 2000
-
-
-def test_cuckoo_contains_many_matches_scalar():
-    # round 6: contains_many is a numpy batch kernel — pin it bit-identical
-    # to the scalar contains() over inserted, absent, and NEGATIVE hashes
-    # (int64 arithmetic-shift / floor-mod semantics must match Python ints)
-    import numpy as np
-
-    ck = SEEN.CuckooFilter(1 << 10)
-    rng = np.random.Generator(np.random.PCG64(99))
-    inserted = rng.integers(-(2**62), 2**62, size=500, dtype=np.int64)
-    for h in inserted:
-        ck.insert(int(h))
-    absent = rng.integers(-(2**62), 2**62, size=500, dtype=np.int64)
-    probe = np.concatenate([inserted, absent])
-    got = ck.contains_many(probe)
-    want = np.array([ck.contains(int(h)) for h in probe], dtype=bool)
-    assert (got == want).all()
-    assert got[: len(inserted)].all()  # no false negatives for inserted keys
-    assert ck.contains_many(np.array([], dtype=np.int64)).shape == (0,)
+    # the fresh-fast branch is really taken: the bloom clears most new keys
+    tagged = SEEN.prefilter_candidates(cand, bloom)
+    assert tagged.filter(~F.col("maybe_seen")).count() > 1500
+    tiered = SEEN.mark_seen(cand, seen, bloom)
+    plain = cand.join(
+        seen.select("cache_key", F.lit(True).alias("_hit")), "cache_key", "left"
+    )
+    got = sorted((r.id, r._seen) for r in tiered.collect())
+    want = sorted((r.id, r._hit is not None) for r in plain.collect())
+    assert got == want  # the bloom tier can never change the answer
+    assert len(got) == 3000  # row-preserving
+    assert sum(not s for _, s in got) == 2000
 
 
 def test_bloom_prefilter_broadcast_envelope(spark):
