@@ -374,11 +374,22 @@ def connected_components(
     # envelope the iterative O(log d) loop below is the authority — the
     # decision is one count over the already-persisted edges frame, the
     # same scale-adaptive shape as AQE's broadcast decision and _tp's
-    # split-size guard. At 10^10 docs a pathological edge set stays
+    # split-size guard. The count stops at the envelope, so a huge graph
+    # is not counted in full. At 10^10 docs a pathological edge set stays
     # distributed; a typical one (dedup clusters are tiny) still fits.
-    n_edges = edges.count()
+    n_edges = edges.limit(driver_max_edges + 1).count()
     if n_edges <= driver_max_edges:
-        pdf = edges.toPandas()  # Arrow path (session default)
+        # A null id never matches the distributed loop's `b == id` join: it
+        # passes no label on, and its own row takes the min over its
+        # non-null neighbours' labels. So rows with a null `b` change
+        # nothing, and the null node is solved after the others. `a` is
+        # coalesced to `b` so the column has no nulls and Arrow keeps the id
+        # type (a nullable int64 column would come back as float64).
+        pdf = edges.filter(F.col("b").isNotNull()).select(
+            F.col("a").isNull().alias("a_null"), F.coalesce("a", "b").alias("a"), "b"
+        ).toPandas()  # Arrow path (session default)
+        null_nbrs = pdf["b"][pdf["a_null"]]
+        pdf = pdf[~pdf["a_null"]]
         a_type = edges.schema["a"].dataType
         parent: dict = {}
 
@@ -398,6 +409,9 @@ def connected_components(
                 parent[rb] = ra  # larger root under smaller: root == min(set)
         nodes = pdf["a"].drop_duplicates()  # self-loops put every node in `a`
         out = pd.DataFrame({"id": nodes, "comp": [find(n) for n in nodes]})
+        if len(null_nbrs):
+            null_row = {"id": [None], "comp": [min(find(b) for b in null_nbrs)]}
+            out = pd.concat([out.astype(object), pd.DataFrame(null_row, dtype=object)])
         edges.unpersist()
         spark = pairs.sparkSession
         from pyspark.sql.types import StructField, StructType

@@ -202,7 +202,7 @@ class _Wave:
     admitted: DataFrame
     seen_delta: DataFrame
     order: DataFrame
-    results: DataFrame
+    results: DataFrame  # result rows, not yet image-validated
     terminal: DataFrame
     metrics: dict
     stamps: tuple[float, float, float]  # wave start, expand start, commit start
@@ -292,9 +292,10 @@ class CrawlEngine:
         (CrawlConfig.interpreted_below_wave_budget): small-wave runs plan in
         interpreted mode so the per-wave janino recompile of literal-bearing
         plans disappears; big-wave runs keep codegen. run() wraps the BSP
-        loop in this; callers that materialize a CrawlRun's lazy outputs
-        AFTER run() returns (the end-of-run results union compiles there)
-        can wrap that consumption too."""
+        loop in this. A CrawlRun's outputs are lazy, so their plans compile
+        when the caller consumes them after run() returns — in memory mode
+        that includes the results union and its image validation — and the
+        caller can wrap that consumption too."""
         if self.cfg.wave_budget > self.cfg.interpreted_below_wave_budget:
             return nullcontext()
         return _conf_scope(self.spark, _INTERPRETED)
@@ -551,11 +552,12 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------------ #
-    def _build_results(self, done: DataFrame, wave: int) -> DataFrame:
+    def _result_rows(self, done: DataFrame, wave: int) -> DataFrame:
+        """One wave's result rows, before image validation."""
         # optional side-outputs when the config enables them: decoded body
         # text (F-11) and hook events (F-29)
         opt = [c for c in ("body_text", "hook_events") if c in done.columns]
-        base = done.select(
+        return done.select(
             "job_id", "parent_id", "url_canon",
             F.lit(wave).cast("int").alias("wave"),
             F.col("rank").cast("int").alias("rank"),
@@ -565,6 +567,15 @@ class CrawlEngine:
             "latency_us",
             *opt,
         )
+
+    def _validate_results(self, base: DataFrame) -> DataFrame:
+        """The image-validation projection over narrowed result rows:
+        applied once above the end-of-run union (memory mode) or once per
+        written wave (durable mode), so the pandas UDF's Python runner
+        starts once per output partition, not once per partition of every
+        wave's leaf. Without the images join beneath it (synthetic mode),
+        the optimizer pushes the projection through the union into each
+        wave's branch, still above that branch's coalesce."""
         if self.cfg.validate_images and self.cfg.payload_mode == "synthetic":
             from crawlspark.image import fetch_validate_udf
 
@@ -993,7 +1004,7 @@ class CrawlEngine:
         # discarded (scrapemate.go:489-523) + P-2 per-type emit (a collect
         # job's Process returns nil data): caching/expansion above are NOT
         # gated — only the results stream is
-        results_df = self._build_results(
+        results_df = self._result_rows(
             done.filter(
                 F.col("use_in_results")
                 & ~F.col("is_init")
@@ -1097,24 +1108,21 @@ class CrawlEngine:
 
         # wave outputs stay LAZY over the persisted `out`/`cand` frames in
         # memory mode (one final union at end-of-run); durable mode writes
-        # them now so a resume can replay committed waves.
-        order_df, results_df, terminal_df = w.order, w.results, w.terminal
+        # them now so a resume can replay committed waves. Each wave's
+        # result rows hold ≤ one wave's rows yet inherit the full n_shuffle
+        # width of the `out` leaf, so they are narrowed first (width-only:
+        # no exchange, rows and values unchanged). Validation comes after
+        # the narrowing — per written wave here, above the union in
+        # _outputs — because a pandas UDF under a coalesce still starts its
+        # Python runner once per partition of the leaf beneath it.
+        results_df = w.results.coalesce(max(1, self._n_shuffle // 8))
+        order_df, terminal_df = w.order, w.terminal
         if self.io:
             order_df = self._materialize(order_df, "order", wave)
-            results_df = self._materialize(results_df, "results", wave)
+            results_df = self._materialize(
+                self._validate_results(results_df), "results", wave
+            )
             terminal_df = self._materialize(terminal_df, "terminal", wave)
-        else:
-            # narrow the per-wave results frame before it enters the
-            # end-of-run union (round 6): each wave's results plan holds
-            # ≤ one wave's rows yet inherits the full n_shuffle width
-            # from the `out` leaf, so the union's consuming action ran
-            # waves × n_shuffle pandas-UDF tasks of ~10² rows each —
-            # per-task Arrow/worker overhead dominated the validate
-            # kernel ~10× (event-log profile: 512 tasks, 190 core-s for
-            # ~20 core-s of kernel). A coalesce is width-only (no
-            # exchange, rows and values unchanged); durable mode already
-            # writes compacted parquet instead.
-            results_df = results_df.coalesce(max(1, self._n_shuffle // 8))
         st.parts["order"].append(order_df)
         st.parts["results"].append(results_df)
         st.parts["terminal"].append(terminal_df)
@@ -1148,10 +1156,14 @@ class CrawlEngine:
                 return self.spark.createDataFrame([], schema)
             return reduce(DataFrame.unionByName, parts)
 
+        results = _union(st.parts["results"], RESULTS_SCHEMA)
+        if st.parts["results"] and not self.io:
+            # durable parts were validated as each wave was written
+            results = self._validate_results(results)
         return CrawlRun(
             responses=_union(st.parts["responses"], RESPONSES_SCHEMA),
             order=_union(st.parts["order"], ORDER_SCHEMA),
-            results=_union(st.parts["results"], RESULTS_SCHEMA),
+            results=results,
             terminal=_union(st.parts["terminal"], TERMINAL_SCHEMA),
             seen=st.seen,
             metrics=st.metrics,

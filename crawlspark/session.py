@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, at most 16 GB. In local mode the
+    driver JVM also runs every executor, and a heap sized to the whole host
+    lets it grow until the kernel kills it instead of collecting."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
+        return "16g"
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "crawlspark",
     master: str | None = None,
@@ -89,7 +100,7 @@ def get_spark(
         # image binary columns make rows big — cap Arrow batch rows
         # (256 rows × ~200KB payload ≈ 50MB per in-flight batch per core)
         "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
-        "spark.driver.memory": os.environ.get("CRAWLSPARK_DRIVER_MEM", "16g"),
+        "spark.driver.memory": os.environ.get("CRAWLSPARK_DRIVER_MEM", _default_driver_mem()),
         "spark.ui.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     }

@@ -10,6 +10,8 @@ known-graph components) rather than reference file:line twins.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -74,6 +76,23 @@ def test_connected_components_driver_path_matches_distributed(spark):
     slow = connected_components(pairs, driver_max_edges=0)
     assert fast.schema == slow.schema
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_connected_components_null_id_driver_matches_distributed(spark, id_type):
+    # a null id must not crash the driver union-find (None < int raises);
+    # the driver path returns what the distributed loop returns: the null
+    # node links nothing, and its own row takes its neighbours' min label
+    raw = [(5, 6), (None, 5), (None, 9), (9, 2), (4, None), (7, 7), (None, None)]
+    if id_type == "string":
+        raw = [tuple(None if v is None else f"d{v}" for v in r) for r in raw]
+    pairs = spark.createDataFrame(raw, f"doc_a {id_type}, doc_b {id_type}")
+    fast = connected_components(pairs)
+    slow = connected_components(pairs, driver_max_edges=0)
+    assert fast.schema == slow.schema
+    got = Counter(map(tuple, fast.collect()))
+    assert got == Counter(map(tuple, slow.collect()))
+    assert sum(n for (i, _), n in got.items() if i is None) == 1
 
 
 def test_connected_components_empty_pairs(spark):

@@ -125,3 +125,55 @@ def test_wave_leaf_sharing_computes_upstream_once(spark):
     assert acc.value == 1000, (
         f"upstream executed {acc.value / 1000:.1f}x — leaf sharing broken"
     )
+
+
+def _exec_nodes(plan, above=()):
+    """(node name, names of the nodes above it) for every node of an
+    executed plan, looking inside adaptive plans and their query stages."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _exec_nodes(plan.executedPlan(), above)
+        return
+    if name.endswith("QueryStage"):
+        yield from _exec_nodes(plan.plan(), above)
+        return
+    yield name, above
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _exec_nodes(kids.apply(i), above + (name,))
+
+
+@pytest.mark.parametrize("payload_mode", ["table", "synthetic"])
+def test_crawl_results_validate_above_the_wave_narrowing(spark, payload_mode):
+    """A pandas UDF under a Coalesce starts its Python runner once per
+    partition of the leaf beneath the Coalesce, not once per output
+    partition. The engine therefore validates the results once, above the
+    end-of-run union of the narrowed per-wave frames: no ArrowEvalPython
+    node under a Coalesce. In table mode the images join holds the
+    projection above the Union, so there is exactly one such node; in
+    synthetic mode the optimizer pushes the projection through the Union
+    into each wave's branch, where it still sits above the Coalesce."""
+    from crawlspark import synth
+    from crawlspark.engine import CrawlConfig, CrawlEngine
+
+    world = synth.make_world(n_hosts=6, total_pages=300)
+    eng = CrawlEngine(
+        spark,
+        pages=synth.pages_df(spark, world),
+        robots=synth.robots_df(spark, world),
+        budgets=synth.politeness_df(spark, world),
+        images=synth.images_df(spark, world),
+        config=CrawlConfig(wave_budget=60, max_waves=2, payload_mode=payload_mode),
+    )
+    run = eng.run(synth.seeds_df(spark, world))
+    assert run.waves == 2
+    with eng.exec_mode():
+        rows = run.results.collect()
+    assert any(r["pixels_ok"] for r in rows)
+    nodes = list(_exec_nodes(run.results._jdf.queryExecution().executedPlan()))
+    assert "Union" in {name for name, _ in nodes}
+    evals = [above for name, above in nodes if name == "ArrowEvalPython"]
+    assert evals and not any("Coalesce" in above for above in evals), evals
+    if payload_mode == "table":
+        assert len(evals) == 1, f"{len(evals)} ArrowEvalPython nodes"
+        assert "Union" not in evals[0], evals[0]
