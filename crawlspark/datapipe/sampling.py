@@ -42,7 +42,7 @@ def scan_cumsum(
     WITHOUT a global-order window (which funnels the corpus through one
     task): repartitionByRange on the order key → per-partition running sum →
     + broadcast partition-offset join. Same two-phase shape as
-    frontier.with_inspark_rank; one range shuffle, fully lazy."""
+    frontier.ranked_within; one range shuffle, fully lazy."""
     spark = df.sparkSession
     if n_parts is None:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))

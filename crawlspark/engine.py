@@ -72,6 +72,20 @@ _INTERPRETED = {
     "spark.sql.codegen.wholeStage": "false",
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
 }
+# Execution-mode crossover (exec_mode): runs whose wave_budget is strictly
+# below this plan in interpreted mode. Every wave's plans embed wave-varying
+# literals (wave_ts, seq watermarks, the wave number), and Spark inlines
+# primitive literals into the generated Java source, so whole-stage codegen
+# janino-recompiles the wave pipeline every wave: compile cost scales with
+# plans, execution cost with rows. Measured on `crawl_floor` (local[4],
+# 4-core host, 4 crawls per process after warm-up): with Spark's default
+# 100-entry codegen cache, codegen recompiles 74-77 classes every wave and
+# a crawl takes 8.5 s against 6.3 s interpreted; even with a 1,000-entry
+# cache, where repeated plans compile nothing, codegen crawls take
+# 6.7-7.5 s against 5.9-6.6 s (ABBA-ordered pairs). Above the crossover
+# (e.g. the 1M-row xsat waves), per-row interpreted overhead (~µs/row ×
+# ~30 exprs) outgrows the ~1 s/wave compile and codegen stays on.
+INTERPRETED_BELOW_WAVE_BUDGET = 200_000
 
 
 @contextmanager
@@ -143,20 +157,6 @@ class CrawlConfig:
     payload_mode: str = "table"
     payload_px: int = 128  # synthetic-mode image edge length
     workdir: str | None = None  # set → durable checkpoints + resume
-    # Execution-mode crossover (round 6, guide §1.2 "per-task work"): every
-    # wave's plans embed wave-varying literals (wave_ts, seq watermarks, the
-    # wave number), and Spark inlines primitive literals into the generated
-    # Java source, so whole-stage codegen janino-RECOMPILES the wave pipeline
-    # every wave — compile cost scales with PLANS (≈1s/wave measured at
-    # medium scale), execution cost with ROWS. Below this wave_budget the
-    # engine plans its frames in interpreted mode (wholeStage off,
-    # factoryMode NO_CODEGEN: identical semantics, zero compile): interleaved
-    # A/B at the 50k-budget bench scale reads 25.7/27.7 s wave-sum
-    # interpreted vs 31.2/29.1 codegen. Above it (e.g. the 1M-row xsat
-    # waves), per-row interpreted overhead (~µs/row × ~30 exprs) outgrows
-    # the ~1s/wave compile and codegen stays on — the same measure-first
-    # crossover reasoning as bloom_prefilter_min_seen.
-    interpreted_below_wave_budget: int = 200_000
 
 
 @dataclass
@@ -195,7 +195,6 @@ class _Loop:
 class _Wave:
     """One wave's frames between its fused action and its commit."""
 
-    sel: DataFrame  # the persisted selection, released at commit
     future: DataFrame  # pending rows not yet eligible
     leftover: DataFrame  # eligible rows the selection left out
     retried: DataFrame
@@ -289,14 +288,14 @@ class CrawlEngine:
 
     def exec_mode(self):
         """Context manager applying the engine's execution-mode choice
-        (CrawlConfig.interpreted_below_wave_budget): small-wave runs plan in
+        (INTERPRETED_BELOW_WAVE_BUDGET): small-wave runs plan in
         interpreted mode so the per-wave janino recompile of literal-bearing
         plans disappears; big-wave runs keep codegen. run() wraps the BSP
         loop in this. A CrawlRun's outputs are lazy, so their plans compile
         when the caller consumes them after run() returns — in memory mode
         that includes the results union and its image validation — and the
         caller can wrap that consumption too."""
-        if self.cfg.wave_budget > self.cfg.interpreted_below_wave_budget:
+        if self.cfg.wave_budget >= INTERPRETED_BELOW_WAVE_BUDGET:
             return nullcontext()
         return _conf_scope(self.spark, _INTERPRETED)
 
@@ -344,15 +343,12 @@ class CrawlEngine:
         s = s.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
         allowed, blocked = politeness.robots_gate(s, self.robots)
-        # Round 6 (second pass): the seed rank is LAZY (with_inspark_rank) —
-        # the old with_global_rank paid a dedicated persist + driver collect
-        # inside the timed wall just to number ≤ n_seeds rows. For the unique
-        # seed_order key both forms compute the identical global rank
-        # (rank-within-partition + preceding-partition offsets is partition-
-        # boundary-independent), and the seed/seen counts the driver needs
-        # ride ONE fused aggregate in run() instead of three sequential
-        # actions (same union-by-_kind trick as the per-wave fused action).
-        allowed = frontier.with_inspark_rank(allowed, ("seed_order",), "_srank")
+        # the seed rank is lazy (no driver action: the seed/seen counts the
+        # driver needs ride ONE fused aggregate in _admit), and its shared
+        # ranked frame goes through the engine's lazy cut, not a persist
+        allowed = frontier.ranked_within(
+            allowed, (), ("seed_order",), "_srank", materialize=self._cut_lazy
+        )
         pending = (
             allowed.withColumn("seq", (F.col("_srank") - 1).cast("long"))
             .withColumn("parent_id", F.lit(None).cast("string"))
@@ -517,7 +513,7 @@ class CrawlEngine:
     def _expand_finish(self, parted: DataFrame, stats, wave: int, wave_ts: int, seq_base: int):
         """Consume the collected per-partition stats (the expansion leg of
         the wave's single fused action) and build the admitted / seen-delta /
-        blocked frames over the already-persisted `parted`."""
+        blocked frames over the already-cut `parted`."""
         n_candidates = sum(r["n_cand"] for r in stats)
         n_new = sum(r["n_fresh"] or 0 for r in stats)
         n_allowed_init = sum(r["n_admit_init"] or 0 for r in stats)
@@ -621,49 +617,25 @@ class CrawlEngine:
         return out.drop("_v", "bytes", "fmt")
 
     # ------------------------------------------------------------------ #
-    def _materialize(
-        self, df: DataFrame, table: str, wave: int, keep_layout: bool = False
-    ) -> DataFrame:
-        """Cut lineage per wave: durable parquet when checkpointing, else
-        localCheckpoint (plan would otherwise grow superlinearly with waves).
-
-        Memory mode checkpoints LAZILY: the work happens inside the next
-        wave's first real action instead of a dedicated driver round-trip —
-        same computation, one fewer serial barrier per call site.
-
-        The checkpoint plan is compiled UNDER AQE (the session default).
-        Under AQE, Dataset.localCheckpoint materializes non-final query
-        stages at compile time even with eager=False, but that work is NOT
-        wasted: AQE uses the finished stages' runtime statistics to re-plan
-        the wave's downstream joins/aggregations, and the checkpoint work
-        overlaps the wave boundary (an interleaved A/B of compiling every
-        cut statically lost 4/4 pairs, BENCH/ab_r4_ckpt.json).
-
-        `keep_layout` (round 5): compile THIS cut statically so the
-        checkpointed frame keeps its physical layout metadata. Under AQE the
-        compiled plan is an AdaptiveSparkPlanExec whose outputPartitioning /
-        outputOrdering are still Unknown at compile time, so the LogicalRDD
-        the checkpoint wraps reports UnknownPartitioning — and every
-        downstream window re-exchanges a frame that is ALREADY partitioned
-        the right way. With a static compile the frame reports its
-        hashpartitioning(host_bucket), which both politeness windows ride
-        exchange-free (per_host_topk leads its partition keys with
-        host_bucket for exactly this). Used ONLY for the frontier snapshot:
-        its subplan is unions + an explicitly-hinted broadcast anti-join +
-        an explicit repartition — nothing AQE's runtime re-planning helps
-        with — so the r4 A/B's verdict (AQE-on for the OTHER cuts, where
-        runtime stats feed downstream join planning) stands."""
+    def _materialize(self, df: DataFrame, table: str, wave: int) -> DataFrame:
+        """Cut lineage per wave, which would otherwise grow superlinearly
+        with waves: durable parquet through TableIO when checkpointing (the
+        resume state), else the lazy static cut (`_cut_lazy`)."""
         if self.io:
             self.io.write_wave(df, table, wave)
             return self.io.read_wave(table, wave)
-        if keep_layout:
-            with _conf_scope(self.spark, _AQE_OFF):
-                return df.localCheckpoint(eager=False)
-        return df.localCheckpoint(eager=False)
+        return self._cut_lazy(df)
 
     # ------------------------------------------------------------------ #
     def _cut_lazy(self, df: DataFrame) -> DataFrame:
-        """Intra-wave sharing cut: static-compiled, NON-EAGER localCheckpoint.
+        """The engine's one memory-mode cut: a statically compiled,
+        NON-EAGER localCheckpoint. Every per-run frame that is shared or
+        whose lineage must stop goes through it — the selection, the ranks,
+        the fetch outcomes, the expansion, and every memory-mode
+        `_materialize` — so all of them have one lifetime: the checkpointed
+        blocks are freed by the context cleaner once the frame's Python
+        references drop (memory mode holds them until the end-of-run output
+        union). Nothing is persisted, so nothing needs releasing.
 
         Why not .persist(): the wave's fused action is a UNION of two
         aggregates over the same frames (outcomes + expansion), and the rank
@@ -680,15 +652,14 @@ class CrawlEngine:
         under the block manager's per-partition lock — even when both
         branches of one job race to them.
 
-        Compiled statically (AQE off) for the same reason as keep_layout in
-        _materialize: under AQE, plan→RDD conversion materializes non-final
-        query stages at COMPILE time (serial driver floor), and the frames
-        cut here feed only aggregates and explicitly-hinted joins — nothing
-        AQE's runtime stats would re-plan. Unlike _materialize this cut is
-        never durable: it shares work within one wave, it is not resume
-        state. Block cleanup rides the context cleaner when the wave's
-        Python references drop (memory mode holds them until the end-of-run
-        output union, exactly as the persisted frames were held before)."""
+        Why static (AQE off): under AQE, plan→RDD conversion materializes
+        non-final query stages at COMPILE time (a serial driver round trip
+        per cut), and the compiled AdaptiveSparkPlanExec reports unknown
+        partitioning, so the checkpointed frame would lose its layout.
+        Compiled statically, the frontier snapshot reports
+        hashpartitioning(host_bucket), which both politeness windows ride
+        exchange-free (per_host_topk leads its partition keys with
+        host_bucket for exactly this)."""
         with _conf_scope(self.spark, _AQE_OFF):
             return df.localCheckpoint(eager=False)
 
@@ -729,7 +700,7 @@ class CrawlEngine:
         pending = self._materialize(
             pending.repartition(self._n_shuffle, "host_bucket")
             .sortWithinPartitions("priority", "seq"),
-            "pending", 0, keep_layout=True,
+            "pending", 0,
         )
         seen = self._materialize(seen_delta, "seen", 0)
         blocked_term = self._materialize(blocked_term, "terminal", 0)
@@ -799,8 +770,8 @@ class CrawlEngine:
     def _wave(self, st: _Loop) -> _Wave | None:
         """One wave up to its commit: eligible → politeness → selection →
         fetch → outcomes → the wave's single fused action → expansion.
-        Advances the driver-side counters; returns None (with the
-        selection released) when the wave scheduled nothing."""
+        Advances the driver-side counters; returns None when the wave
+        scheduled nothing."""
         spark = self.spark
         cfg = self.cfg
         wave = st.wave
@@ -852,7 +823,7 @@ class CrawlEngine:
             wave_sel = stealth.with_profile_headers(
                 wave_sel, spark, cfg.fetch_profile
             )
-        wave_sel = wave_sel.persist()
+        wave_sel = self._cut_lazy(wave_sel)
         fetched = FT.fetch_simulate(
             wave_sel, self.pages, self.response_cache,
             carry_body_html=cfg.extract_links_from_body,
@@ -869,7 +840,7 @@ class CrawlEngine:
             # zero-config path stays pure Catalyst. Cache hits keep
             # their stored out_links (extracted when the response was
             # first fetched); body is dropped immediately so HTML never
-            # enters the persisted wave state.
+            # enters the cut wave state.
             anchor_links = F.regexp_extract_all(
                 F.col("body_html"), F.lit(r'<a href="([^"]+)"'), 1
             )
@@ -975,7 +946,6 @@ class CrawlEngine:
         n_sched = sum(by_outcome.values())
         t_expand = time.monotonic()
         if n_sched == 0:
-            wave_sel.unpersist()  # out/parted are RDD leaves — GC-cleaned
             return None
 
         # broadcast hint, not AQE-discovered: wave_sel is ≤ wave_budget
@@ -983,7 +953,7 @@ class CrawlEngine:
         # sort-merge anti-join would shuffle the whole frontier on
         # job_id every wave. The hint also keeps the join broadcast
         # inside the frontier snapshot's statically-compiled cut
-        # (keep_layout in _commit), where AQE isn't around to discover it.
+        # (_cut_lazy), where AQE isn't around to discover it.
         leftover = eligible.join(
             F.broadcast(wave_sel.select("job_id")), "job_id", "left_anti"
         )
@@ -1032,7 +1002,7 @@ class CrawlEngine:
         n_retried = by_outcome.get("retry", 0)
         st.n_pending += n_retried + n_allowed - n_sched
         return _Wave(
-            sel=wave_sel, future=future, leftover=leftover,
+            future=future, leftover=leftover,
             retried=out.filter(F.col("outcome") == "retry").select(*PENDING_COLS),
             admitted=admitted, seen_delta=seen_delta,
             order=order_df, results=results_df,
@@ -1055,23 +1025,16 @@ class CrawlEngine:
         fold the delta into the seen set, keep the bloom tier up, record the
         wave's outputs and metrics, and commit the manifest."""
         wave = st.wave
-        # Both cuts compile statically (keep_layout): under AQE,
-        # localCheckpoint(eager=False) materializes the cut's non-final
-        # query stages at COMPILE time — ~2 s of serial driver floor per
-        # wave on frames whose downstream is unions and explicitly-
-        # hinted joins only, i.e. nothing AQE's runtime stats would
-        # re-plan (profile: the mat-pending leg, 10 jobs/wave).
-        admitted = self._materialize(w.admitted, "admitted", wave, keep_layout=True)
+        admitted = self._materialize(w.admitted, "admitted", wave)
         # narrow each seen delta before it enters the probe-side union
         # chain: a delta holds ≤ one wave's fresh keys (≪ the full seen
         # set the shuffle width is sized for), yet at full width the
         # chain grows the seen-probe stage by n_shuffle tasks per wave
         # between compactions (event-log profile: +64 tasks/wave). A
         # coalesce is width-only — no exchange; the upstream reads the
-        # already-persisted expansion frame — and cuts the leak 8×.
+        # already-cut expansion frame — and cuts the leak 8×.
         seen_delta = self._materialize(
-            w.seen_delta.coalesce(max(1, self._n_shuffle // 8)),
-            "seen", wave, keep_layout=True,
+            w.seen_delta.coalesce(max(1, self._n_shuffle // 8)), "seen", wave
         )
         # width-only narrowing of the union branches (round 6 second
         # pass): each branch is a filter over a 64-partition leaf, so the
@@ -1094,7 +1057,7 @@ class CrawlEngine:
         new_pending = new_pending.repartition(
             self._n_shuffle, "host_bucket"
         ).sortWithinPartitions("priority", "seq")
-        st.pending = self._materialize(new_pending, "pending", wave, keep_layout=True)
+        st.pending = self._materialize(new_pending, "pending", wave)
         st.seen = st.seen.unionByName(seen_delta)  # both sides already materialized
         self._bloom_maintain(st.seen)
         self._seen_chain += 1
@@ -1106,7 +1069,7 @@ class CrawlEngine:
             )
             self._seen_chain = 0
 
-        # wave outputs stay LAZY over the persisted `out`/`cand` frames in
+        # wave outputs stay LAZY over the wave's cut `out`/`parted` frames in
         # memory mode (one final union at end-of-run); durable mode writes
         # them now so a resume can replay committed waves. Each wave's
         # result rows hold ≤ one wave's rows yet inherit the full n_shuffle
@@ -1144,9 +1107,6 @@ class CrawlEngine:
                  "metrics": st.metrics, "n_pending": st.n_pending,
                  "n_init_pending": st.n_init_pending}
             )
-            w.sel.unpersist()  # out/parted are RDD leaves — GC-cleaned
-        # memory mode: `out`/`cand` stay cached — the end-of-run union of
-        # wave outputs reads them instead of recomputing the whole wave
 
     def _outputs(self, st: _Loop) -> CrawlRun:
         """The end-of-run unions of every wave's outputs (lazy)."""

@@ -5,10 +5,10 @@ Reference analogs: Push/Jobs of the memory provider
 0>1>2 with FIFO within a level — re-expressed as sorts over a frontier table.
 
 Scale notes (the parts a naive port gets wrong at 10^10 rows):
-  * Global rank is NEVER a single-partition window. `with_global_rank` range-
+  * Global rank is NEVER a single-partition window. `ranked_within` range-
     partitions on the sort key, ranks within partitions, and adds per-partition
-    offsets (driver sees only P counts). Deterministic regardless of the
-    physical partition boundaries.
+    offsets from a tiny count aggregate (no driver action). Deterministic
+    regardless of the physical partition boundaries.
   * `monotonically_increasing_id` is banned — it depends on partition layout,
     so a retried stage could renumber the frontier (SURVEY.md §7.5.1).
 """
@@ -30,104 +30,24 @@ def normalize_priority(col):
     ).cast("int")
 
 
-def with_global_rank(
-    df: DataFrame, order_cols=ORDER_COLS, rank_col: str = "rank", n_parts: int | None = None
-):
-    """1-based dense global rank by `order_cols`, without a global window.
-
-    Plan: repartitionByRange(order_cols) → per-partition row_number →
-    + cumulative offset of preceding partitions (P-row driver aggregate,
-    broadcast back). Wall-clock is one range shuffle; no single-task sort.
-
-    Returns (ranked_df, total_rows) — the total falls out of the offset
-    collect for free, so callers never need a separate count().
-    """
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) for c in order_cols]
-    parted = df.repartitionByRange(n_parts, *cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    parted = parted.withColumn(
-        "_rn", F.row_number().over(Window.partitionBy("_pid").orderBy(*cols))
-    ).persist()  # the count-collect below and the join both consume it
-    counts = {r["_pid"]: r["n"] for r in parted.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()] or [(0, 0)], "_pid int, _off long"
-    )
-    ranked = (
-        parted.join(F.broadcast(offset_df), "_pid")
-        .withColumn(rank_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
-    return ranked, acc
-
-
-def with_inspark_rank(
-    df: DataFrame, order_cols=ORDER_COLS, rank_col: str = "rank", n_parts: int | None = None
-) -> DataFrame:
-    """Like with_global_rank but with NO driver action: the per-partition
-    offsets are a running-sum window over the tiny (≤ n_parts rows) count
-    aggregate, broadcast-joined back. The whole rank is one lazy plan, so it
-    fuses into whichever downstream action consumes it — this is what lets a
-    BSP wave run with only two driver round-trips (engine.run)."""
-    spark = df.sparkSession
-    if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) for c in order_cols]
-    parted = df.repartitionByRange(n_parts, *cols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    # persist: both the offsets subplan (broadcast side) and the main join
-    # consume this frame — without a cache the whole upstream (politeness
-    # windows, eligibility scan) runs twice per wave
-    parted = parted.withColumn(
-        "_rn", F.row_number().over(Window.partitionBy("_pid").orderBy(*cols))
-    ).persist()
-    offsets = (
-        parted.groupBy("_pid")
-        .agg(F.count("*").alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_n")
-    )
-    return (
-        parted.join(F.broadcast(offsets), "_pid")
-        .withColumn(rank_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
-
-
 def with_inspark_rank_bucketed(
     df: DataFrame,
     bucket_col,
     rank_col: str = "rank",
     n_parts: int | None = None,
-    materialize=None,
+    *,
+    materialize,
 ) -> DataFrame:
     """Global (priority, seq) rank in ONE explicit hash exchange, no sampling.
 
-    `with_inspark_rank` pays, per call: the range-bounds sampling job that
-    `repartitionByRange` hides, the range exchange itself, AND a second full
-    exchange because the rank window's required hashpartitioning(_pid) does
-    not match rangepartitioning. Here the caller supplies `bucket_col` — a
-    pure row function that must be MONOTONE NON-DECREASING in `seq` within
-    each priority value (the engine derives one from its driver-tracked seq
-    watermarks; any clamped linear map of seq qualifies). Then:
+    `ranked_within(df, (), ORDER_COLS)` pays, per call: the range-bounds
+    sampling job that `repartitionByRange` hides, the range exchange itself,
+    AND a second full exchange because the rank window's required
+    hashpartitioning(_pid) does not match rangepartitioning. Here the
+    caller supplies `bucket_col` — a pure row function that must be
+    MONOTONE NON-DECREASING in `seq` within each priority value (the engine
+    derives one from its driver-tracked seq watermarks; any clamped linear
+    map of seq qualifies). Then:
 
       _rn      = row_number within (_pid, priority) ordered by seq
       offsets  = per-(_pid, priority) counts, prefix-summed in
@@ -151,8 +71,8 @@ def with_inspark_rank_bucketed(
     parted = df.withColumn("_pid", bucket_col).repartition(n_parts, "_pid")
     # shared by the offsets broadcast subplan AND the main join — without a
     # cut the whole upstream (politeness windows, eligibility scan) runs
-    # twice. `materialize` (the engine passes a lazy RDD-leaf cut) is
-    # preferred over .persist(): the self-join below makes the analyzer
+    # twice. The engine passes a lazy RDD-leaf cut as `materialize`, not
+    # .persist(): the self-join below makes the analyzer
     # rewrite the offsets side's attribute ids, after which the cache
     # manager no longer matches the persisted plan on that side and the
     # offsets subplan recomputes the upstream from scratch (observed on the
@@ -162,7 +82,7 @@ def with_inspark_rank_bucketed(
         "_rn",
         F.row_number().over(Window.partitionBy("_pid", "priority").orderBy("seq")),
     )
-    parted = materialize(parted) if materialize is not None else parted.persist()
+    parted = materialize(parted)
     offsets = (
         parted.groupBy("_pid", "priority")
         .agg(F.count("*").alias("_n"))
@@ -187,14 +107,25 @@ def with_inspark_rank_bucketed(
 
 
 def ranked_within(
-    df: DataFrame, part_cols, order_cols, rank_col: str = "rank", n_parts: int | None = None
+    df: DataFrame,
+    part_cols,
+    order_cols,
+    rank_col: str = "rank",
+    n_parts: int | None = None,
+    materialize=DataFrame.persist,
 ) -> DataFrame:
     """row_number() within `part_cols` WITHOUT funnelling each group through
     one task. A plain Window.partitionBy(priority) with 3 priority values is
     three single-task sorts of N/3 rows — at 100× one executor sorts 10^9
     rows. Here: range-partition on (part_cols, order_cols), rank within
     (physical partition, group), then add per-(partition, group) offsets
-    computed from a tiny count aggregate — all lazy, no driver action."""
+    computed from a tiny count aggregate — all lazy, no driver action.
+    Empty `part_cols` gives the global rank by `order_cols`.
+
+    `materialize` cuts the ranked frame, which the offsets subplan and the
+    main join both read. The default persists it, so datapipe callers
+    release it with `datapipe.release_caches`; the engine passes its lazy
+    lineage cut, which the context cleaner frees."""
     spark = df.sparkSession
     if n_parts is None:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -203,10 +134,9 @@ def ranked_within(
     parted = df.repartitionByRange(n_parts, *pcols, *ocols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    # persist — shared by the offsets broadcast subplan and the main join
-    parted = parted.withColumn(
+    parted = materialize(parted.withColumn(
         "_rn", F.row_number().over(Window.partitionBy("_pid", *pcols).orderBy(*ocols))
-    ).persist()
+    ))
     offsets = (
         parted.groupBy("_pid", *pcols)
         .agg(F.count("*").alias("_n"))
@@ -231,7 +161,10 @@ def ranked_within(
 
 
 def select_wave(
-    eligible_polite: DataFrame, wave_budget: int, seq_bucket=None, materialize=None
+    eligible_polite: DataFrame,
+    wave_budget: int,
+    seq_bucket=None,
+    materialize=DataFrame.persist,
 ) -> DataFrame:
     """Global budget: top-`wave_budget` by (priority, seq) = strict priority
     with FIFO inside each level (the nested-select semantics of memory.go:37-64).
@@ -245,11 +178,14 @@ def select_wave(
     `seq_bucket`: optional pure-row bucket column, monotone in seq within
     each priority (the engine passes one derived from its seq watermarks) —
     routes through `with_inspark_rank_bucketed`, saving the range-sampling
-    job and one of the two exchanges the range-partitioned rank pays."""
+    job and one of the two exchanges the range-partitioned rank pays.
+    `materialize` cuts the rank's shared frame (see `ranked_within`)."""
     if seq_bucket is not None:
         ranked = with_inspark_rank_bucketed(
             eligible_polite, seq_bucket, "rank", materialize=materialize
         )
     else:
-        ranked = with_inspark_rank(eligible_polite, ORDER_COLS, "rank")
+        ranked = ranked_within(
+            eligible_polite, (), ORDER_COLS, "rank", materialize=materialize
+        )
     return ranked.filter(F.col("rank") <= wave_budget)

@@ -1,8 +1,9 @@
 """Cache contract: operators may persist fan-out frames for their own plan,
 and `datapipe.release_caches` must leave NO cached frames behind once the
 consuming action is done (VERDICT r2 item 9 — storage-memory hygiene for
-long-lived sessions)."""
+long-lived sessions). A crawl run persists nothing of its own."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.datapipe import release_caches
@@ -76,3 +77,38 @@ def test_release_after_each_operator(spark):
         # the hygiene hook fully releases it (settle: same async drain)
         assert _settled_baseline(spark) <= base
     assert persisted_any  # the operators really do persist fan-out frames
+
+
+def _n_cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+@pytest.mark.parametrize("mode", ["memory", "durable"])
+def test_crawl_run_adds_no_cache_entries(spark, tmp_path, mode):
+    """The engine persists only its engine-lifetime fixtures (pages, robots,
+    budgets), at construction. Every per-run frame — the selection, the
+    ranks, the wave cuts — is a lazy lineage cut the context cleaner frees,
+    so a run and the consumption of its outputs leave the session's
+    CacheManager entry count where construction left it."""
+    from crawlspark import synth
+    from crawlspark.engine import CrawlConfig, CrawlEngine
+
+    world = synth.make_world(n_hosts=4, total_pages=80)
+    eng = CrawlEngine(
+        spark,
+        pages=synth.pages_df(spark, world),
+        robots=synth.robots_df(spark, world),
+        budgets=synth.politeness_df(spark, world),
+        images=None,
+        config=CrawlConfig(
+            validate_images=False, wave_budget=20, max_waves=3,
+            workdir=str(tmp_path) if mode == "durable" else None,
+        ),
+    )
+    base = _n_cache_entries(spark)
+    run = eng.run(synth.seeds_df(spark, world))
+    assert run.waves == 3
+    with eng.exec_mode():
+        for out in (run.order, run.results, run.terminal, run.seen, run.responses):
+            out.write.format("noop").mode("overwrite").save()
+    assert _n_cache_entries(spark) == base

@@ -3,16 +3,15 @@ cuts (`_materialize`, `_cut_lazy`) and the execution-mode switch
 (`exec_mode`) must leave AQE and the codegen confs exactly as they found
 them — also when the scoped body raises — and a cut keeps every row.
 
-Inside the scope each path sees only its own setting: the default wave cut
-compiles under the session's AQE, layout-keeping and intra-wave cuts compile
-with AQE off, and below the wave-budget crossover the run plans in
-interpreted mode.
+Inside the scope each path sees only its own setting: every memory-mode
+cut compiles with AQE off, and below the wave-budget crossover the run plans
+in interpreted mode.
 """
 
 import pytest
 
 from crawlspark import synth
-from crawlspark.engine import CrawlConfig, CrawlEngine
+from crawlspark.engine import INTERPRETED_BELOW_WAVE_BUDGET, CrawlConfig, CrawlEngine
 
 CONFS = (
     "spark.sql.adaptive.enabled",
@@ -33,7 +32,7 @@ def _engine(spark, world, **cfg_kwargs):
         robots=synth.robots_df(spark, world),
         budgets=synth.politeness_df(spark, world),
         images=None,
-        config=CrawlConfig(validate_images=False, wave_budget=30, **cfg_kwargs),
+        config=CrawlConfig(**{"validate_images": False, "wave_budget": 30, **cfg_kwargs}),
     )
 
 
@@ -44,13 +43,16 @@ def _in_exec_mode(eng, df):
 
 # case → (config overrides, the cut, confs in force while the cut compiles)
 CASES = {
-    "materialize": ({}, lambda eng, df: eng._materialize(df, "pending", 0), {}),
-    "materialize_keep_layout": (
-        {}, lambda eng, df: eng._materialize(df, "pending", 0, keep_layout=True), AQE_OFF,
-    ),
+    "materialize": ({}, lambda eng, df: eng._materialize(df, "pending", 0), AQE_OFF),
     "cut_lazy": ({}, lambda eng, df: eng._cut_lazy(df), AQE_OFF),
-    "exec_mode_below_crossover": ({}, _in_exec_mode, INTERPRETED),
-    "exec_mode_above_crossover": ({"interpreted_below_wave_budget": 10}, _in_exec_mode, {}),
+    "exec_mode_below_crossover": ({}, _in_exec_mode, {**INTERPRETED, **AQE_OFF}),
+    # the crossover is strict: a wave budget equal to it keeps codegen
+    "exec_mode_at_crossover": (
+        {"wave_budget": INTERPRETED_BELOW_WAVE_BUDGET}, _in_exec_mode, AQE_OFF,
+    ),
+    "exec_mode_above_crossover": (
+        {"wave_budget": INTERPRETED_BELOW_WAVE_BUDGET + 1}, _in_exec_mode, AQE_OFF,
+    ),
 }
 
 
