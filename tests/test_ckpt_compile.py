@@ -41,9 +41,22 @@ def _in_exec_mode(eng, df):
         return eng._materialize(df, "pending", 0)
 
 
+def _materialize_keep_layout(eng, df):
+    """The frontier-snapshot cut `_commit` makes: a hash-partitioned,
+    sorted frame must come out of the cut still reporting its partitioning,
+    which a cut compiled under AQE would lose."""
+    snapshot = df.repartition(4, "url").sortWithinPartitions("priority")
+    cut = eng._materialize(snapshot, "pending", 0)
+    partitioning = cut._jdf.queryExecution().executedPlan().outputPartitioning()
+    assert partitioning.toString().startswith("hashpartitioning(url"), partitioning.toString()
+    assert partitioning.numPartitions() == 4
+    return cut
+
+
 # case → (config overrides, the cut, confs in force while the cut compiles)
 CASES = {
     "materialize": ({}, lambda eng, df: eng._materialize(df, "pending", 0), AQE_OFF),
+    "materialize_keep_layout": ({}, _materialize_keep_layout, AQE_OFF),
     "cut_lazy": ({}, lambda eng, df: eng._cut_lazy(df), AQE_OFF),
     "exec_mode_below_crossover": ({}, _in_exec_mode, {**INTERPRETED, **AQE_OFF}),
     # the crossover is strict: a wave budget equal to it keeps codegen
