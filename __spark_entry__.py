@@ -709,7 +709,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             robots=synth.robots_df(spark, world),
             budgets=synth.politeness_df(spark, world),
             images=None,
-            config=CrawlConfig(validate_images=False, wave_budget=30, use_bloom=False),
+            config=CrawlConfig(validate_images=False, wave_budget=30),
         )
         run = eng.run(synth.seeds_df(spark, world))
         return run.order
@@ -731,7 +731,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             robots=synth.robots_df(spark, world),
             budgets=synth.politeness_df(spark, world),
             images=None,
-            config=CrawlConfig(validate_images=False, wave_budget=25, use_bloom=False),
+            config=CrawlConfig(validate_images=False, wave_budget=25),
         )
         run = eng.run(synth.seeds_df(spark, world))
         return run.order

@@ -46,7 +46,7 @@ SCALES = {
                  host_budget=20000, hot_host_budget=10000),
     # round-5 order-of-magnitude stress point (verdict item 4): 10× xsat's
     # pages/seeds/budgets at the SAME host count, so per-host skew pressure
-    # grows 10× too. Crosses bloom_prefilter_min_seen (2M), so the bloom
+    # grows 10× too. Crosses engine.BLOOM_PREFILTER_MIN_SEEN (2M), so the bloom
     # tier actually engages — xsat stays just under it.
     "x10sat": dict(n_hosts=256, total_pages=20_000_000, n_images=512,
                    n_seeds=1_000_000, host_budget=200_000,
@@ -55,9 +55,9 @@ SCALES = {
 
 
 def run_crawl_bench(spark, scale: str = "medium", wave_budget: int = 50_000,
-                    validate_images: bool = True, use_bloom: bool = True,
-                    max_waves: int = 10, image_px: int = 64,
-                    payload: str = "synthetic", bloom_bits: int | None = None) -> dict:
+                    validate_images: bool = True, max_waves: int = 10,
+                    image_px: int = 64, payload: str = "synthetic",
+                    bloom_bits: int | None = None) -> dict:
     from crawlspark import synth
     from crawlspark.engine import CrawlConfig, CrawlEngine
 
@@ -88,7 +88,6 @@ def run_crawl_bench(spark, scale: str = "medium", wave_budget: int = 50_000,
     cfg = CrawlConfig(
         wave_budget=wave_budget,
         validate_images=validate_images,
-        use_bloom=use_bloom,
         max_waves=max_waves,
         payload_mode=payload if scale != "small" else "table",
         payload_px=image_px,
@@ -133,14 +132,9 @@ def run_crawl_bench(spark, scale: str = "medium", wave_budget: int = 50_000,
     # passes together were 137 AQE stage-jobs with ~120 s of scheduling
     # dead time at tiny budget — pure serial floor, paid once now).
     spark.sparkContext.setJobGroup("teardown", "end-of-run output materialization")
-    # the end-of-run union compiles HERE (lazy memory-mode outputs), so the
-    # engine's execution-mode choice must cover this consumption too — the
-    # union of every wave's plan is the biggest single codegen unit of the
-    # whole run (round 6: interpreted below the wave-budget crossover)
-    with eng.exec_mode():
-        results = run.results.persist()
-        results.write.format("noop").mode("overwrite").save()
-        n_results = results.count()
+    results = run.results.persist()
+    results.write.format("noop").mode("overwrite").save()
+    n_results = results.count()
     wall = time.monotonic() - t0
 
     sched = sum(m["scheduled"] for m in run.metrics)
@@ -148,17 +142,12 @@ def run_crawl_bench(spark, scale: str = "medium", wave_budget: int = 50_000,
     dedup = sum(m["deduped"] for m in run.metrics)
     # driver-held seen-tier footprint (the only engine state that lives on
     # the driver and grows with corpus size — the stress artifact tracks it)
-    bloom_mb = fill = None
-    if eng.bloom is not None:
-        import numpy as np
+    import numpy as np
 
-        bloom_mb = round(
-            sum(b.nbytes for b in eng.bloom.bitsets.values()) / 1e6, 2
-        )
-        if getattr(eng, "_bloom_synced", False):
-            fill = round(
-                float(np.unpackbits(eng.bloom.bitsets[0]).mean()), 4
-            )
+    bloom_mb = round(sum(b.nbytes for b in eng.bloom.bitsets.values()) / 1e6, 2)
+    fill = None
+    if eng._bloom_synced:
+        fill = round(float(np.unpackbits(eng.bloom.bitsets[0]).mean()), 4)
     return {
         "bloom_tier_mb": bloom_mb,
         "bloom_fill_p0": fill,  # bit-set ratio of partition 0 (None = tier deferred)

@@ -1,8 +1,7 @@
-"""Deduplication operators for a crawl corpus: exact, MinHash-LSH, SimHash,
-n-gram Jaccard, embedding near-dup.
+"""Deduplication operators for a crawl corpus: MinHash-LSH, SimHash, n-gram
+Jaccard, embedding near-dup.
 
 All candidate generation is shuffle-bounded by design:
-  * exact — one hash-groupBy (map-side partial agg for free);
   * MinHash-LSH — signatures are narrow (k small ints per doc); the only join
     is the band-bucket self-join, whose fan-out is the candidate set itself;
   * SimHash — banding on 16-bit halves bounds the self-join the same way;
@@ -15,22 +14,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crawlspark.datapipe.text import content_fingerprint, hash60, tokens
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-id document per normalized-content fingerprint."""
-    keyed = df.withColumn("fingerprint", content_fingerprint(F.col(text_col)))
-    w = Window.partitionBy("fingerprint").orderBy(id_col)
-    return (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .withColumn("dup_count", F.count("*").over(Window.partitionBy("fingerprint")))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+from crawlspark.datapipe.text import hash60, tokens
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:

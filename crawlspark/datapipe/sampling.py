@@ -143,7 +143,7 @@ def curation_pipeline(
     # between pipeline stages anyway.
     #
     # Round 6: keeper selection is a NARROW aggregate + id join instead of
-    # exact_dedup's row_number window — the window shuffled every surviving
+    # a per-fingerprint row_number window — the window shuffled every surviving
     # document's full text by fingerprint; here only (fingerprint, id) pairs
     # shuffle (with map-side partial min), and the id join attaches text
     # without re-keying it by fingerprint (guide §8: decide with small rows,

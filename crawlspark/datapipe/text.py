@@ -1,4 +1,5 @@
-"""Text analysis: token stats, quality scoring, language ID, fingerprinting.
+"""Text analysis: tokenization, fingerprinting, TF-IDF, repetition and
+surprisal features, PII redaction, span dedup.
 
 Every function here is a pure Catalyst expression — zero Python in the hot
 path, and SQL-portable so the DuckDB oracle pins each one exactly.
@@ -9,13 +10,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# small, fixed stopword sets — deterministic lang-ID heuristic shared with the
-# DuckDB oracle (keep in sync with oracle SQL in __spark_entry__.py)
+# small, fixed English stopword set — shared with the DuckDB oracle (keep in
+# sync with the oracle SQL in __spark_entry__.py)
 STOP_EN = ["the", "and", "of", "to", "in", "is", "that", "it", "for", "was"]
-STOP_DE = ["der", "die", "das", "und", "ist", "von", "zu", "mit", "den", "nicht"]
-STOP_FR = ["le", "la", "les", "et", "de", "un", "une", "est", "pour", "que"]
-
-PUNCT_CLASS = r"[.,!?;:'\"()\-]"  # explicit class — identical regex in DuckDB
 
 
 def tokens(text: Column) -> Column:
@@ -25,49 +22,6 @@ def tokens(text: Column) -> Column:
 
 def token_count(text: Column) -> Column:
     return F.size(tokens(text))
-
-
-def punct_ratio(text: Column) -> Column:
-    n = F.length(text)
-    stripped = F.length(F.regexp_replace(text, PUNCT_CLASS, ""))
-    return F.when(n > 0, (n - stripped).cast("double") / n).otherwise(F.lit(0.0))
-
-
-def stopword_hits(text: Column, stopwords: list[str]) -> Column:
-    arr = F.array(*[F.lit(s) for s in stopwords])
-    return F.size(F.filter(tokens(text), lambda t: F.array_contains(arr, t)))
-
-
-def quality_score(text: Column) -> Column:
-    """Heuristic quality ∈ [0,1]: length band + stopword presence − punct excess.
-
-    (The classic pre-training text filters: C4-style length/stopword/punct
-    gates, expressed as one score so thresholding is a filter.)
-    """
-    n_tok = token_count(text)
-    len_ok = F.when((n_tok >= 5) & (n_tok <= 100000), F.lit(0.4)).otherwise(F.lit(0.0))
-    stop_r = stopword_hits(text, STOP_EN).cast("double") / F.greatest(n_tok, F.lit(1))
-    stop_part = F.least(stop_r * F.lit(4.0), F.lit(0.4))
-    punct_part = F.greatest(F.lit(0.0), F.lit(0.2) - punct_ratio(text))
-    return F.round(len_ok + stop_part + punct_part, 6)
-
-
-def lang_scores(text: Column):
-    en = stopword_hits(text, STOP_EN)
-    de = stopword_hits(text, STOP_DE)
-    fr = stopword_hits(text, STOP_FR)
-    return en, de, fr
-
-
-def lang_id(text: Column) -> Column:
-    """argmax over stopword-hit counts; ties break en > de > fr; no hits → und."""
-    en, de, fr = lang_scores(text)
-    return (
-        F.when((en >= de) & (en >= fr) & (en > 0), F.lit("en"))
-        .when((de >= fr) & (de > 0), F.lit("de"))
-        .when(fr > 0, F.lit("fr"))
-        .otherwise(F.lit("und"))
-    )
 
 
 def hash60(col: Column) -> Column:
@@ -80,17 +34,6 @@ def hash60(col: Column) -> Column:
 def content_fingerprint(text: Column) -> Column:
     """Whitespace-normalized content hash (exact-dedup key)."""
     return hash60(F.lower(F.regexp_replace(F.trim(text), r"\s+", " ")))
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(t))
-        .withColumn("punct_ratio", F.round(punct_ratio(t), 6))
-        .withColumn("quality", quality_score(t))
-        .withColumn("lang_pred", lang_id(t))
-        .withColumn("fingerprint", content_fingerprint(t))
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -27,6 +27,7 @@ import time
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 from functools import reduce
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -72,7 +73,7 @@ _INTERPRETED = {
     "spark.sql.codegen.wholeStage": "false",
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
 }
-# Execution-mode crossover (exec_mode): runs whose wave_budget is strictly
+# Execution-mode crossover (_exec_mode): runs whose wave_budget is strictly
 # below this plan in interpreted mode. Every wave's plans embed wave-varying
 # literals (wave_ts, seq watermarks, the wave number), and Spark inlines
 # primitive literals into the generated Java source, so whole-stage codegen
@@ -86,6 +87,23 @@ _INTERPRETED = {
 # (e.g. the 1M-row xsat waves), per-row interpreted overhead (~µs/row ×
 # ~30 exprs) outgrows the ~1 s/wave compile and codegen stays on.
 INTERPRETED_BELOW_WAVE_BUDGET = 200_000
+# The seen set's bloom tier: BLOOM_PARTITIONS bitsets of CrawlConfig.bloom_bits
+# each, keyed by pmod(url_hash, BLOOM_PARTITIONS).
+BLOOM_PARTITIONS = 16
+# The bloom prefilter pays an Arrow round-trip per candidate to cut the exact
+# anti-join's shuffle; that trade only wins once the seen set is large. Below
+# this row count the engine joins directly, and below half of it the tier is
+# not built at all (membership answers don't change either way).
+BLOOM_PREFILTER_MIN_SEEN = 2_000_000
+# Operating envelope of the broadcast probe: prefilter_candidates ships ALL
+# partitions' bitsets to every executor, so the tier is only probe-able while
+# BLOOM_PARTITIONS × bloom_bits/8 stays executor-broadcastable. Above this
+# cap the engine switches the prefilter off (the exact anti-join is always
+# the authority — results are unchanged, only the shuffle-cutting
+# optimization goes). At 10^10 keys × 10 bits/key (~12 GB) the right fix is
+# partition-routing the probe by pmod(url_hash, P); the cap makes the current
+# broadcast probe fail SOFT instead of OOMing an executor.
+BLOOM_BROADCAST_MAX_MB = 256
 
 
 @contextmanager
@@ -109,27 +127,14 @@ class CrawlConfig:
     default_host_budget: int = C.DEFAULT_HOST_BUDGET
     wave_period_us: int = 500_000
     max_waves: int = C.DEFAULT_MAX_WAVES
-    host_buckets: int = C.DEFAULT_HOST_BUCKETS
-    salt_buckets: int = 16
+    # fixed layout constants, not constructor fields: the frontier's host
+    # buckets and the politeness window's salt buckets
+    host_buckets: ClassVar[int] = C.DEFAULT_HOST_BUCKETS
+    salt_buckets: ClassVar[int] = 16
     validate_images: bool = True
-    use_bloom: bool = True
-    bloom_partitions: int = 16
+    # bits per bloom partition: size to ~10 bits/key/partition at the
+    # target corpus (the default saturates past ~3M keys)
     bloom_bits: int = 1 << 20
-    # bloom prefilter pays an Arrow round-trip per candidate to cut the exact
-    # anti-join's shuffle; that trade only wins once the seen set is large.
-    # Below this row count the engine joins directly (the tier is still
-    # built + checkpointed either way — membership answers don't change).
-    bloom_prefilter_min_seen: int = 2_000_000
-    # operating envelope of the broadcast probe (round 6, r5 verdict #4):
-    # prefilter_candidates ships ALL P bitsets to every executor, so the
-    # tier is only probe-able while n_partitions × m_bits/8 stays
-    # executor-broadcastable. Above this cap the engine auto-disables the
-    # prefilter (the exact anti-join is always the authority — results are
-    # unchanged, only the shuffle-cutting optimization switches off). At the
-    # north-rule 10^10 keys × 10 bits/key (~12 GB) the right fix is
-    # partition-routing the probe by pmod(url_hash, P); the cap makes the
-    # current broadcast probe fail SOFT instead of OOMing an executor.
-    bloom_broadcast_max_mb: int = 256
     # P-2 job-type registry (name → jobtypes.JobTypeSpec); None → the single
     # default type, which reproduces untyped crawls bit-for-bit
     job_types: dict | None = None
@@ -257,44 +262,32 @@ class CrawlEngine:
         self._seen_chain = 0
         self._seen_rows = 0  # driver-side running count (no extra actions)
         self._bloom_synced = False
-        self.bloom = (
-            SEEN.PartitionedBloom(self.cfg.bloom_partitions, self.cfg.bloom_bits)
-            if self.cfg.use_bloom
-            else None
-        )
+        self.bloom = SEEN.PartitionedBloom(BLOOM_PARTITIONS, self.cfg.bloom_bits)
 
     def _bloom_broadcastable(self) -> bool:
         """True while the tier's total packed size fits the broadcast-probe
-        envelope (bloom_broadcast_max_mb). The exact anti-join never depends
+        envelope (BLOOM_BROADCAST_MAX_MB). The exact anti-join never depends
         on this — past the cap the prefilter just switches off."""
-        if self.bloom is None:
-            return False
         tier_bytes = self.bloom.n_partitions * (self.bloom.m_bits // 8)
-        return tier_bytes <= self.cfg.bloom_broadcast_max_mb * 1024 * 1024
+        return tier_bytes <= BLOOM_BROADCAST_MAX_MB * 1024 * 1024
 
     def _bloom_maintain(self, seen_full) -> None:
         """Build the bloom tier only once the seen set is big enough for the
         prefilter to pay for itself: construction is deferred, then a
         one-time full build catches up. After that sync, per-wave deltas
         ride the fused action's `bloom` branch (zero extra driver jobs)."""
-        if self.bloom is None:
-            return
-        if self._seen_rows < self.cfg.bloom_prefilter_min_seen // 2:
+        if self._seen_rows < BLOOM_PREFILTER_MIN_SEEN // 2:
             self._bloom_synced = False
             return
         if not self._bloom_synced:
             self.bloom.add_from_df(seen_full)
             self._bloom_synced = True
 
-    def exec_mode(self):
+    def _exec_mode(self):
         """Context manager applying the engine's execution-mode choice
         (INTERPRETED_BELOW_WAVE_BUDGET): small-wave runs plan in
         interpreted mode so the per-wave janino recompile of literal-bearing
-        plans disappears; big-wave runs keep codegen. run() wraps the BSP
-        loop in this. A CrawlRun's outputs are lazy, so their plans compile
-        when the caller consumes them after run() returns — in memory mode
-        that includes the results union and its image validation — and the
-        caller can wrap that consumption too."""
+        plans disappears; big-wave runs keep codegen."""
         if self.cfg.wave_budget >= INTERPRETED_BELOW_WAVE_BUDGET:
             return nullcontext()
         return _conf_scope(self.spark, _INTERPRETED)
@@ -447,7 +440,7 @@ class CrawlEngine:
 
         prefilter_bloom = (
             self.bloom
-            if self._seen_rows >= self.cfg.bloom_prefilter_min_seen
+            if self._seen_rows >= BLOOM_PREFILTER_MIN_SEEN
             and self._bloom_broadcastable()
             else None
         )
@@ -665,7 +658,19 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ #
     def run(self, seeds: DataFrame, resume: bool = False) -> CrawlRun:
-        with self.exec_mode():
+        """Crawl from `seeds` (or, with `resume`, from the workdir's last
+        committed wave) until the frontier empties, a stop outcome, or
+        max_waves. The returned outputs are lazy; consume them as plain
+        DataFrames.
+
+        While it runs, run() sets session SQL conf — the execution mode for
+        its whole duration (interpreted below INTERPRETED_BELOW_WAVE_BUDGET)
+        and AQE off around each lineage cut — and restores the previous
+        values on return, also when it raises. It is therefore not
+        reentrant across threads that share the Spark session: another
+        thread's queries see the engine's conf while a crawl runs, and two
+        concurrent runs can restore each other's values."""
+        with self._exec_mode():
             return self._run(seeds, resume)
 
     def _run(self, seeds: DataFrame, resume: bool = False) -> CrawlRun:
@@ -748,22 +753,17 @@ class CrawlEngine:
         )
         parts = {t: [] for t in _OUTPUT_TABLES}
         for w0 in range(0, wave + 1):
-            for tbl in ("order", "results", "terminal"):
+            for tbl in _OUTPUT_TABLES:
                 if self.io.wave_exists(tbl, w0):
                     parts[tbl].append(self.io.read_wave(tbl, w0))
         self._seen_rows = seen.count()
-        n_pending = manifest.get("n_pending")
-        if n_pending is None:  # pre-round-2 manifest — one-time fallback
-            n_pending = pending.count()
-        n_init_pending = manifest.get("n_init_pending")
-        if n_init_pending is None:
-            n_init_pending = pending.filter("is_init").count() if "is_init" in pending.columns else 0
         self._bloom_maintain(seen)  # rebuild tier from committed seen set
         return _Loop(
             pending=pending, seen=seen, wave=wave, seq_base=manifest["seq_base"],
-            n_pending=n_pending, n_init_pending=n_init_pending,
+            n_pending=manifest["n_pending"],
+            n_init_pending=manifest["n_init_pending"],
             stopped=manifest["stopped"], resumed_from=wave,
-            metrics=list(manifest.get("metrics", [])), parts=parts,
+            metrics=list(manifest["metrics"]), parts=parts,
         )
 
     # ------------------------------------------------------------------ #
@@ -1025,7 +1025,9 @@ class CrawlEngine:
         fold the delta into the seen set, keep the bloom tier up, record the
         wave's outputs and metrics, and commit the manifest."""
         wave = st.wave
-        admitted = self._materialize(w.admitted, "admitted", wave)
+        # a cut in both modes: no resume reads the admitted rows back (the
+        # durable frontier snapshot below holds them)
+        admitted = self._cut_lazy(w.admitted)
         # narrow each seen delta before it enters the probe-side union
         # chain: a delta holds ≤ one wave's fresh keys (≪ the full seen
         # set the shuffle width is sized for), yet at full width the

@@ -20,7 +20,7 @@ def world():
 
 
 def _engine(spark, world, pages=None, **kw):
-    cfg = CrawlConfig(validate_images=False, wave_budget=40, use_bloom=False)
+    cfg = CrawlConfig(validate_images=False, wave_budget=40)
     return CrawlEngine(
         spark,
         pages=pages if pages is not None else synth.pages_df(spark, world),

@@ -108,7 +108,6 @@ def test_crawl_run_adds_no_cache_entries(spark, tmp_path, mode):
     base = _n_cache_entries(spark)
     run = eng.run(synth.seeds_df(spark, world))
     assert run.waves == 3
-    with eng.exec_mode():
-        for out in (run.order, run.results, run.terminal, run.seen, run.responses):
-            out.write.format("noop").mode("overwrite").save()
+    for out in (run.order, run.results, run.terminal, run.seen, run.responses):
+        out.write.format("noop").mode("overwrite").save()
     assert _n_cache_entries(spark) == base

@@ -1,7 +1,8 @@
 """Every engine path that changes session SQL conf scopes it: the checkpoint
-cuts (`_materialize`, `_cut_lazy`) and the execution-mode switch
-(`exec_mode`) must leave AQE and the codegen confs exactly as they found
-them — also when the scoped body raises — and a cut keeps every row.
+cuts (`_materialize`, `_cut_lazy`) and the execution-mode switch that
+`run()` applies (`_exec_mode`) must leave AQE and the codegen confs exactly
+as they found them — also when the scoped body raises — and a cut keeps
+every row.
 
 Inside the scope each path sees only its own setting: every memory-mode
 cut compiles with AQE off, and below the wave-budget crossover the run plans
@@ -37,7 +38,7 @@ def _engine(spark, world, **cfg_kwargs):
 
 
 def _in_exec_mode(eng, df):
-    with eng.exec_mode():
+    with eng._exec_mode():
         return eng._materialize(df, "pending", 0)
 
 

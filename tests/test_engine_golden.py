@@ -5,7 +5,8 @@ crawl order, seen set, retry trace, results, and per-wave metrics."""
 import pytest
 
 from crawlspark import constants as C
-from crawlspark import synth
+from crawlspark import engine, synth
+from crawlspark import seen as SEEN
 from crawlspark.engine import CrawlConfig, CrawlEngine
 from crawlspark.oracle import run_oracle
 
@@ -226,17 +227,26 @@ def test_discard_policy_single_attempt(spark):
     assert got == {g["job_id"]: (g["attempts"], g["final_state"]) for g in golden.retry_trace}
 
 
-def test_bloom_tier_fused_delta_stays_exact(spark):
+def test_bloom_tier_fused_delta_stays_exact(spark, monkeypatch):
     """Round 5: once synced, bloom-tier deltas ride the wave's fused action
     (engine run loop `bloom_live` branch) instead of a dedicated per-wave
     job. A dropped delta would be a bloom FALSE NEGATIVE — a re-discovered
     URL marked definitely-new skips the exact seen join and is admitted
     twice. Force the tier live from wave 1 (threshold=2) on a revisit-heavy
     world and require the full golden parity: order, seen set, metrics."""
+    monkeypatch.setattr(engine, "BLOOM_PREFILTER_MIN_SEEN", 2)
+    merged = []
+    merge_rows = SEEN.PartitionedBloom.merge_rows
+
+    def spy(self, rows):
+        merged.append(len(rows))
+        return merge_rows(self, rows)
+
+    monkeypatch.setattr(SEEN.PartitionedBloom, "merge_rows", spy)
     world = synth.make_world(n_hosts=6, total_pages=110)
-    run, golden = _run_both(
-        spark, world, wave_budget=40, bloom_prefilter_min_seen=2
-    )
+    run, golden = _run_both(spark, world, wave_budget=40)
+    # the tier was live: one catch-up sync, then a delta every wave
+    assert len(merged) >= 1 + len(run.metrics), merged
     got = [
         (r.wave, r.rank, r.job_id, r.url_canon)
         for r in run.order.orderBy("wave", "rank").collect()

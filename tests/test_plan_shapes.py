@@ -167,8 +167,7 @@ def test_crawl_results_validate_above_the_wave_narrowing(spark, payload_mode):
     )
     run = eng.run(synth.seeds_df(spark, world))
     assert run.waves == 2
-    with eng.exec_mode():
-        rows = run.results.collect()
+    rows = run.results.collect()
     assert any(r["pixels_ok"] for r in rows)
     nodes = list(_exec_nodes(run.results._jdf.queryExecution().executedPlan()))
     assert "Union" in {name for name, _ in nodes}

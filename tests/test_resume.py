@@ -1,7 +1,8 @@
 """Checkpoint/resume contract (north rule: 'resumable from checkpoint with
 per-partition lineage + metrics', no URL fetched twice): kill the BSP loop
 after wave k, restart from the manifest, and the final crawl order / seen set
-/ results must equal an uninterrupted run's exactly."""
+/ terminal states / results / response-cache rows must equal an
+uninterrupted run's exactly."""
 
 import shutil
 
@@ -16,7 +17,6 @@ def _mk_engine(spark, world, workdir, max_waves):
         validate_images=False,
         wave_budget=30,
         max_waves=max_waves,
-        use_bloom=True,
         workdir=workdir,
     )
     return CrawlEngine(
@@ -39,6 +39,11 @@ def _order_rows(run):
         (r.wave, r.rank, r.job_id, r.url_canon)
         for r in run.order.orderBy("wave", "rank").collect()
     ]
+
+
+def _table_rows(df):
+    """Every row of an output table, order-insensitively."""
+    return sorted(repr(tuple(r)) for r in df.collect())
 
 
 def test_kill_and_resume_identical(spark, world, tmp_path_factory):
@@ -68,6 +73,10 @@ def test_kill_and_resume_identical(spark, world, tmp_path_factory):
     got = {r.job_id: (r.attempts, r.final_state) for r in cont.terminal.collect()}
     want = {r.job_id: (r.attempts, r.final_state) for r in full.terminal.collect()}
     assert got == want
+    # the committed waves' outputs come back too, not only the waves run
+    # after the resume
+    for table in ("results", "responses"):
+        assert _table_rows(getattr(cont, table)) == _table_rows(getattr(full, table)), table
 
     # no URL fetched twice across the kill/resume boundary: a job_id appears
     # at most once per wave, and a done job never reappears in a later wave
@@ -98,6 +107,9 @@ def test_manifest_commit_is_atomic(spark, world, tmp_path_factory):
         assert os.path.exists(os.path.join(wd, "pending", f"wave={w}")) or w < man["wave"]
     assert os.path.exists(os.path.join(wd, "pending", f"wave={man['wave']}"))
     assert os.path.exists(os.path.join(wd, "seen", "wave=0"))
+    # the admitted rows are a cut, not a durable table: no resume reads
+    # them back, the frontier snapshot holds them
+    assert not os.path.exists(os.path.join(wd, "admitted"))
 
 
 # ---------------------------------------------------------------------------
@@ -106,8 +118,8 @@ def test_manifest_commit_is_atomic(spark, world, tmp_path_factory):
 # — after some write_wave()s landed but before the manifest advanced — and
 # assert the resume replays the half-committed wave to a bit-identical run
 # (SURVEY §7.5 item 6: re-running a half-committed wave yields identical
-# output). Wave-3 write order is responses? → admitted → seen → pending →
-# order → results → terminal → commit_manifest (engine.py:708-808), so:
+# output). Wave-3 write order is responses (CrawlEngine._wave) → seen →
+# pending → order → results → terminal → commit_manifest (_commit), so:
 #   ("seen", 3)     = early-mid crash (frontier/order dirs never written)
 #   ("terminal", 3) = every wave-3 dir durable, manifest still at wave 2 —
 #                     the duplicate-wave re-run case
@@ -136,7 +148,6 @@ def _mk_engine_io(spark, world, io, max_waves):
         validate_images=False,
         wave_budget=30,
         max_waves=max_waves,
-        use_bloom=True,
         workdir=io.workdir,
     )
     return CrawlEngine(
@@ -162,6 +173,8 @@ def full_run_rows(spark, world, tmp_path_factory):
         "terminal": {
             r.job_id: (r.attempts, r.final_state) for r in full.terminal.collect()
         },
+        "results": _table_rows(full.results),
+        "responses": _table_rows(full.responses),
     }
     shutil.rmtree(base, ignore_errors=True)
     return rows
@@ -203,3 +216,5 @@ def test_mid_commit_crash_resumes_identically(
     assert {
         r.job_id: (r.attempts, r.final_state) for r in cont.terminal.collect()
     } == full_run_rows["terminal"]
+    for table in ("results", "responses"):
+        assert _table_rows(getattr(cont, table)) == full_run_rows[table], table

@@ -60,40 +60,25 @@ def test_tiered_dedup_exact_vs_plain_anti_join(spark):
     assert sum(not s for _, s in got) == 2000
 
 
-def test_bloom_prefilter_broadcast_envelope(spark):
-    # round 6 (r5 verdict #4): the broadcast probe auto-disables once the
-    # tier exceeds the configured executor-broadcastable envelope — the
-    # exact anti-join authority is unaffected, only the prefilter gates off
-    from crawlspark.engine import CrawlConfig, CrawlEngine
-    from crawlspark import synth
+def test_bloom_prefilter_broadcast_envelope(spark, monkeypatch):
+    # the broadcast probe switches off once the tier exceeds the
+    # executor-broadcastable envelope — the exact anti-join authority is
+    # unaffected, only the prefilter gates off
+    from crawlspark import engine, synth
 
     world = synth.make_world(n_hosts=2, total_pages=20)
-    small = CrawlEngine(
-        spark,
-        pages=synth.pages_df(spark, world),
-        robots=synth.robots_df(spark, world),
-        budgets=synth.politeness_df(spark, world),
-        config=CrawlConfig(use_bloom=True, bloom_partitions=4, bloom_bits=1 << 16),
-    )
-    assert small._bloom_broadcastable()  # 4 × 8 KB ≪ 256 MB default
 
-    big = CrawlEngine(
-        spark,
-        pages=synth.pages_df(spark, world),
-        robots=synth.robots_df(spark, world),
-        budgets=synth.politeness_df(spark, world),
-        config=CrawlConfig(
-            use_bloom=True, bloom_partitions=4, bloom_bits=1 << 16,
-            bloom_broadcast_max_mb=0,
-        ),
-    )
-    assert not big._bloom_broadcastable()  # 0 MB cap → prefilter must gate off
+    def make():
+        return engine.CrawlEngine(
+            spark,
+            pages=synth.pages_df(spark, world),
+            robots=synth.robots_df(spark, world),
+            budgets=synth.politeness_df(spark, world),
+            config=engine.CrawlConfig(bloom_bits=1 << 16),
+        )
 
-    off = CrawlEngine(
-        spark,
-        pages=synth.pages_df(spark, world),
-        robots=synth.robots_df(spark, world),
-        budgets=synth.politeness_df(spark, world),
-        config=CrawlConfig(use_bloom=False),
-    )
-    assert not off._bloom_broadcastable()
+    monkeypatch.setattr(engine, "BLOOM_PARTITIONS", 4)
+    assert make()._bloom_broadcastable()  # 4 × 8 KB ≪ 256 MB default
+
+    monkeypatch.setattr(engine, "BLOOM_BROADCAST_MAX_MB", 0)
+    assert not make()._bloom_broadcastable()  # 0 MB cap → prefilter must gate off

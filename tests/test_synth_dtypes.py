@@ -47,7 +47,7 @@ def test_flagship_crawl_runs_without_arrow(no_arrow):
         robots=synth.robots_df(spark, world),
         budgets=synth.politeness_df(spark, world),
         images=None,
-        config=CrawlConfig(validate_images=False, wave_budget=30, use_bloom=False),
+        config=CrawlConfig(validate_images=False, wave_budget=30),
     )
     run = eng.run(synth.seeds_df(spark, world))
     assert run.order.count() > 0

@@ -74,7 +74,7 @@ def _mk_engine(spark, world, io, max_waves):
         images=None,
         config=CrawlConfig(
             validate_images=False, wave_budget=30, max_waves=max_waves,
-            use_bloom=False, workdir="fake://unused",  # io wins over workdir
+            workdir="fake://unused",  # io wins over workdir
         ),
         table_io=io,
     )
@@ -100,7 +100,7 @@ def test_engine_resumes_on_fake_catalog_and_matches_parquet(spark, world, tmp_pa
     # AND cross-implementation agreement between the two catalogs
     cfg = CrawlConfig(
         validate_images=False, wave_budget=30, max_waves=100,
-        use_bloom=False, workdir=str(tmp_path / "wd"),
+        workdir=str(tmp_path / "wd"),
     )
     full = CrawlEngine(
         spark,
