@@ -162,9 +162,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from crawlspark.frontier import ranked_within
 
         # round 6: project to the 3 needed columns BEFORE ranking —
-        # ranked_within persists its range-partitioned frame, which blocks
-        # Catalyst's column pruning, so the unprojected form shuffled and
-        # cached every events column (props is a JSON string, the widest).
+        # ranked_within cuts its range-partitioned frame (a lineage cut),
+        # which blocks Catalyst's column pruning, so the unprojected form
+        # would shuffle and store every events column (props is a JSON
+        # string, the widest).
         # Guide §2.3 "project before the exchange". Output unchanged.
         # ... and pre-spread the single-row-group scan (guide §2.5) AFTER the
         # projection, so only the 3 needed columns cross the rebalance and

@@ -28,7 +28,7 @@ class TableIO:
 
     This class IS the catalog seam: the engine talks only to this surface
     (read_manifest/commit_manifest, write_wave/read_wave/wave_exists/
-    read_waves, write_blob/read_blob) and never touches paths or the
+    read_waves) and never touches paths or the
     filesystem itself, so a real Iceberg catalog — or any other table store
     — drops in by passing `table_io=` to CrawlEngine. The swap is pinned by
     tests/test_tableio_contract.py, which runs the kill-and-resume contract
@@ -84,21 +84,3 @@ class TableIO:
                 raise ValueError(f"no data for {table} and no schema given")
             return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(*paths)
-
-    # -- sidecar binary state (bloom bitsets) -------------------------------
-    def write_blob(self, name: str, data: bytes) -> str:
-        path = os.path.join(self.workdir, name)
-        fd, tmp = tempfile.mkstemp(dir=self.workdir, suffix=".blob.tmp")
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, path)
-        return path
-
-    def read_blob(self, name: str) -> bytes | None:
-        path = os.path.join(self.workdir, name)
-        if not os.path.exists(path):
-            return None
-        with open(path, "rb") as f:
-            return f.read()

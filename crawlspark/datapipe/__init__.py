@@ -5,23 +5,16 @@ needs downstream of the frontier engine: dedup (exact, MinHash-LSH, SimHash,
 n-gram Jaccard, embedding near-dup), similarity search, text analysis, and
 multimodal column plumbing. All Spark-built-in-first; pandas UDFs only where
 the math genuinely needs numpy.
-
-Cache contract: several operators `persist()` frames that fan out into
-multiple consumers inside ONE returned plan (LSH signatures, capped shingle
-sets, the curation pipeline's stage outputs). Those frames must stay cached
-until the caller's action has consumed the returned DataFrame, so the
-operators cannot unpersist them themselves; call `release_caches(spark)`
-after each operator's consuming action in a long-lived session (bench.py
-does exactly this between queries). Between calls, Spark's LRU storage
-eviction is the backstop.
 """
 
 from __future__ import annotations
 
 
 def release_caches(spark) -> None:
-    """Drop every cached DataFrame (the persisted fan-out frames operators
-    leave behind). Call AFTER the action that consumes an operator's result;
-    do not call mid-crawl — the engine's own persisted dimension tables
-    (pages/robots/budgets) would be dropped too and silently recomputed."""
+    """Clear the session's SQL cache. The datapipe caches nothing: every
+    shared frame an operator builds is a lineage cut (`session.cut_lazy`)
+    that the context cleaner frees, so this only drops what callers
+    persisted themselves — the crawl engine's fixtures (pages, robots,
+    budgets, response cache) among them. Do not call it while an engine is
+    still crawling: its fixtures would be recomputed from source."""
     spark.catalog.clearCache()

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawlspark.datapipe.text import hash60, tokens
+from crawlspark.session import cut_lazy
 
 
 def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
@@ -111,14 +112,15 @@ def lsh_candidate_pairs(
 def _lsh_sig_and_candidates(
     df: DataFrame, text_col: str, id_col: str, k: int, bands: int, ngram: int
 ):
-    """Shared core of lsh_candidate_pairs / neardup_components: the persisted
+    """Shared core of lsh_candidate_pairs / neardup_components: the cut
     signature frame and the distinct banded candidate pairs (round 6 split —
     neardup only consumes the PAIRS, so building est_jaccard there paid two
     join passes over the candidate set that Catalyst cannot prune away)."""
-    # persist: the signature frame feeds the band keys AND both sides of the
-    # candidate re-join — uncached, the full shingle+hash pipeline would run
-    # three times (at 100 TB signatures are narrow: k longs per doc)
-    sig = minhash_signature_arrays(shingles(df, text_col, id_col, ngram), k).persist()
+    # cut (session.cut_lazy): the signature frame feeds the band keys AND
+    # both sides of the candidate re-join — uncut, the full shingle+hash
+    # pipeline would run three times (at 100 TB signatures are narrow: k
+    # longs per doc)
+    sig = cut_lazy(minhash_signature_arrays(shingles(df, text_col, id_col, ngram), k))
     r = k // bands
     band_structs = F.array(*[
         F.struct(
@@ -163,23 +165,22 @@ def ngram_jaccard_pairs(
     makes the shingle-group join quadratic — the standard hot-key guard for
     similarity joins at scale. The DuckDB oracle applies the identical cap.
     """
-    # persist both shingle frames: the raw set feeds the df-count and the
-    # cap join; the capped set feeds sizes and BOTH self-join sides —
-    # uncached, the explode pipeline would run five times.
+    # cut both shingle frames (session.cut_lazy): the raw set feeds the
+    # df-count and the cap join; the capped set feeds sizes and BOTH
+    # self-join sides — uncut, the explode pipeline would run five times.
     # Shingles are HASHED to 60-bit ints immediately after the explode: every
     # downstream shuffle (df-count, cap join, self-join) then moves 8-byte
     # longs instead of ~25-byte trigram strings — the oracle applies the
     # identical hash, so any (astronomically rare) collision affects both
     # engines identically and the contract still pins exactly.
-    sh_raw = (
+    sh_raw = cut_lazy(
         shingles(df, text_col, id_col, n)
         .select("doc_id", hash60(F.col("shingle")).alias("shingle"))
-        .persist()
     )
     rare = sh_raw.groupBy("shingle").agg(F.count("*").alias("_df")).filter(
         F.col("_df") <= df_max
     )
-    sh = sh_raw.join(rare.select("shingle"), "shingle").persist()
+    sh = cut_lazy(sh_raw.join(rare.select("shingle"), "shingle"))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     # Round 6: each side carries its doc's shingle-set size INTO the
     # self-join, so the Jaccard threshold applies immediately after the
@@ -344,7 +345,7 @@ def connected_components(
             )
         ).alias("_e")
     ).select("_e.a", "_e.b")
-    edges = both.distinct().persist()
+    edges = cut_lazy(both.distinct())
     # Small-graph short-circuit (round 6, guide §1.2: the distributed
     # algorithm first). The near-dup GRAPH is orders of magnitude smaller
     # than the corpus (only banded near-collisions become edges), and each
@@ -359,7 +360,7 @@ def connected_components(
     # its set, which is exactly the distributed loop's min-label fixpoint,
     # so the output is bit-identical (oracle- and test-pinned). Past the
     # envelope the iterative O(log d) loop below is the authority — the
-    # decision is one count over the already-persisted edges frame, the
+    # decision is one count over the already-cut edges frame, the
     # same scale-adaptive shape as AQE's broadcast decision and _tp's
     # split-size guard. The count stops at the envelope, so a huge graph
     # is not counted in full. At 10^10 docs a pathological edge set stays
@@ -399,7 +400,6 @@ def connected_components(
         if len(null_nbrs):
             null_row = {"id": [None], "comp": [min(find(b) for b in null_nbrs)]}
             out = pd.concat([out.astype(object), pd.DataFrame(null_row, dtype=object)])
-        edges.unpersist()
         spark = pairs.sparkSession
         from pyspark.sql.types import StructField, StructType
 
@@ -447,7 +447,6 @@ def connected_components(
         labels = merged.select("id", "comp")
         if changed == 0:
             break
-    edges.unpersist()
     return labels
 
 

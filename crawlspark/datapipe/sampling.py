@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawlspark.datapipe.text import hash60
+from crawlspark.frontier import _add_prefix_offsets
+from crawlspark.session import cut_lazy
 
 
 def stratified_sample(
@@ -41,41 +43,15 @@ def scan_cumsum(
     """Inclusive running sum of `value_col` in global `order_col` order,
     WITHOUT a global-order window (which funnels the corpus through one
     task): repartitionByRange on the order key → per-partition running sum →
-    + broadcast partition-offset join. Same two-phase shape as
-    frontier.ranked_within; one range shuffle, fully lazy."""
-    spark = df.sparkSession
+    + broadcast partition-offset join. The tail is frontier.ranked_within's,
+    summing `value_col` where the rank counts rows; one range shuffle, fully
+    lazy."""
     if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     parted = df.repartitionByRange(n_parts, F.col(order_col)).withColumn(
         "_pid", F.spark_partition_id()
     )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # persisted until the caller's action completes — released by
-    # datapipe.release_caches (module-docstring cache contract)
-    parted = parted.withColumn("_local", F.sum(value_col).over(w_local)).persist()
-    offsets = (
-        parted.groupBy("_pid")
-        .agg(F.sum(value_col).alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_n")
-    )
-    return (
-        parted.join(F.broadcast(offsets), "_pid")
-        .withColumn(cum_col, (F.col("_local") + F.col("_off")).cast("long"))
-        .drop("_pid", "_local", "_off")
-    )
+    return _add_prefix_offsets(parted, (), (), (order_col,), cum_col, value_col)
 
 
 def pack_sequences(
@@ -126,21 +102,19 @@ def curation_pipeline(
     (doc_id, n_tokens, bin) for the surviving documents.
 
     Every stage is the already-tested operator; composing them stays one
-    lazy Catalyst plan end-to-end (dedup window + repetition agg + row-local
-    sample filter + the two-phase cumsum), so Catalyst prunes columns across
-    stage boundaries and AQE sizes the shuffles — the reason the pipeline is
-    declarative rather than four materialized passes. The persisted fan-out
-    frames below live until the caller's consuming action; release them with
-    datapipe.release_caches (module-docstring cache contract).
+    lazy plan end-to-end (dedup aggregate + repetition agg + row-local
+    sample filter + the two-phase cumsum) rather than four materialized
+    passes: only the two fan-out frames below are lineage cuts, compiled
+    when the pipeline is built and computed by the caller's action.
     """
     from crawlspark.datapipe.text import content_fingerprint, repetition_features
 
-    # persist the fan-out points: `keepers` feeds BOTH the repetition gate
-    # and the survivors join (and `repetition_features` itself branches its
-    # input into array-metric and bigram-count subplans), so without a cache
-    # the dedup + tokenization re-execute per consumer — measured 28 s
-    # vs 7 s at sf0.1. At 100 TB these are the frames you'd checkpoint
-    # between pipeline stages anyway.
+    # cut the fan-out points (session.cut_lazy): `keepers` feeds BOTH the
+    # repetition gate and the survivors join (and `repetition_features`
+    # itself branches its input into array-metric and bigram-count
+    # subplans), so without a cut the dedup + tokenization re-execute per
+    # consumer — measured 28 s vs 7 s at sf0.1. At 100 TB these are the
+    # frames you'd checkpoint between pipeline stages anyway.
     #
     # Round 6: keeper selection is a NARROW aggregate + id join instead of
     # a per-fingerprint row_number window — the window shuffled every surviving
@@ -157,27 +131,26 @@ def curation_pipeline(
         .agg(F.min(id_col).alias(id_col))
         .select(id_col)
     )
-    # tokenize the survivors ONCE at the persisted fan-out point and drop the
+    # tokenize the survivors ONCE at the cut fan-out point and drop the
     # raw text: the repetition gate's two branches and the packer's token
     # count all read `_toks` instead of re-running split+filter per consumer
     # (round 6 — tokenization was the pipeline's most repeated computation,
-    # measured ~3 s of the ~10 s total at sf1.0; the cached frame also
+    # measured ~3 s of the ~10 s total at sf1.0; the cut frame also
     # shrinks, since the token array replaces text + unused columns).
     from crawlspark.datapipe.text import tokens
 
-    keepers = (
+    keepers = cut_lazy(
         df.join(keeper_ids, id_col)
         .select(id_col, strata_col, tokens(F.col(text_col)).alias("_toks"))
-        .persist()
     )
     rep = repetition_features(keepers, text_col, id_col, toks_col="_toks").filter(
         F.col("keep")
     )
     kept = keepers.join(rep.select(F.col("doc_id").alias(id_col)), id_col)
-    sampled = stratified_sample(
+    sampled = cut_lazy(stratified_sample(
         kept, strata_col=strata_col, id_col=id_col,
         default_pct=sample_pct, salt=salt,
-    ).persist()
+    ))
     return pack_sequences(
         sampled.withColumn("_ntok", F.size("_toks")),
         budget=budget, id_col=id_col, n_tokens_col="_ntok",

@@ -154,7 +154,7 @@ def repetition_features(
     allocation per step, while the explode feeds whole-stage-codegen'd hash
     aggregates — the same trade simhash_agg documents. Kept the explode.)
     `toks_col` (round 6): callers that already hold the token array (e.g.
-    curation_pipeline, which persists tokenized keepers once and feeds both
+    curation_pipeline, which cuts its tokenized keepers once and feeds both
     this gate and sequence packing) pass it here to skip re-tokenizing —
     tokenization was the pipeline's single most repeated computation.
     """

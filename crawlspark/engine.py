@@ -24,7 +24,7 @@ the max-wave guard.
 from __future__ import annotations
 
 import time
-from contextlib import contextmanager, nullcontext
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 from functools import reduce
 from typing import ClassVar
@@ -38,6 +38,7 @@ from crawlspark import fetch as FT
 from crawlspark import seen as SEEN
 from crawlspark.checkpoint import TableIO
 from crawlspark.image import validate_image_udf
+from crawlspark.session import conf_scope, cut_lazy
 
 PENDING_COLS = [
     "job_id", "parent_id", "url_canon", "url_hash", "cache_key", "host",
@@ -68,7 +69,6 @@ RESULTS_SCHEMA = (
 )
 
 _OUTPUT_TABLES = ("order", "results", "terminal", "responses")
-_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 _INTERPRETED = {
     "spark.sql.codegen.wholeStage": "false",
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
@@ -104,21 +104,6 @@ BLOOM_PREFILTER_MIN_SEEN = 2_000_000
 # partition-routing the probe by pmod(url_hash, P); the cap makes the current
 # broadcast probe fail SOFT instead of OOMing an executor.
 BLOOM_BROADCAST_MAX_MB = 256
-
-
-@contextmanager
-def _conf_scope(spark, values: dict[str, str]):
-    """Set the session SQL conf `values` for the body and restore the
-    previous values afterwards, also when the body raises."""
-    conf = spark.conf
-    prev = {k: conf.get(k) for k in values}
-    try:
-        for k, v in values.items():
-            conf.set(k, v)
-        yield
-    finally:
-        for k, v in prev.items():
-            conf.set(k, v)
 
 
 @dataclass
@@ -290,7 +275,7 @@ class CrawlEngine:
         plans disappears; big-wave runs keep codegen."""
         if self.cfg.wave_budget >= INTERPRETED_BELOW_WAVE_BUDGET:
             return nullcontext()
-        return _conf_scope(self.spark, _INTERPRETED)
+        return conf_scope(self.spark, _INTERPRETED)
 
     def _retry_action(self, fn, attempts: int = 3, delay_s: float = 1.0):
         """F-4 provider-error restart analog (scrapemate.go:532-543: log,
@@ -338,10 +323,8 @@ class CrawlEngine:
         allowed, blocked = politeness.robots_gate(s, self.robots)
         # the seed rank is lazy (no driver action: the seed/seen counts the
         # driver needs ride ONE fused aggregate in _admit), and its shared
-        # ranked frame goes through the engine's lazy cut, not a persist
-        allowed = frontier.ranked_within(
-            allowed, (), ("seed_order",), "_srank", materialize=self._cut_lazy
-        )
+        # ranked frame is a lineage cut (session.cut_lazy), not a persist
+        allowed = frontier.ranked_within(allowed, (), ("seed_order",), "_srank")
         pending = (
             allowed.withColumn("seq", (F.col("_srank") - 1).cast("long"))
             .withColumn("parent_id", F.lit(None).cast("string"))
@@ -493,8 +476,9 @@ class CrawlEngine:
         # RDD leaf (not .persist): shared by the fused action's ex_agg branch
         # — which the union's attribute dedup would otherwise disconnect from
         # the cache, recomputing the whole expansion — and by _expand_finish's
-        # admitted/seen-delta/blocked frames after the action (see _cut_lazy)
-        parted = self._cut_lazy(parted)
+        # admitted/seen-delta/blocked frames after the action (see
+        # session.cut_lazy)
+        parted = cut_lazy(parted)
         ex_agg = parted.groupBy("_pid").agg(
             F.count("*").alias("n_cand"),
             F.sum(F.when(F.col("_fresh"), 1).otherwise(0)).alias("n_fresh"),
@@ -613,48 +597,11 @@ class CrawlEngine:
     def _materialize(self, df: DataFrame, table: str, wave: int) -> DataFrame:
         """Cut lineage per wave, which would otherwise grow superlinearly
         with waves: durable parquet through TableIO when checkpointing (the
-        resume state), else the lazy static cut (`_cut_lazy`)."""
+        resume state), else the lazy static cut (`session.cut_lazy`)."""
         if self.io:
             self.io.write_wave(df, table, wave)
             return self.io.read_wave(table, wave)
-        return self._cut_lazy(df)
-
-    # ------------------------------------------------------------------ #
-    def _cut_lazy(self, df: DataFrame) -> DataFrame:
-        """The engine's one memory-mode cut: a statically compiled,
-        NON-EAGER localCheckpoint. Every per-run frame that is shared or
-        whose lineage must stop goes through it — the selection, the ranks,
-        the fetch outcomes, the expansion, and every memory-mode
-        `_materialize` — so all of them have one lifetime: the checkpointed
-        blocks are freed by the context cleaner once the frame's Python
-        references drop (memory mode holds them until the end-of-run output
-        union). Nothing is persisted, so nothing needs releasing.
-
-        Why not .persist(): the wave's fused action is a UNION of two
-        aggregates over the same frames (outcomes + expansion), and the rank
-        is a SELF-join (frame ⋈ its own count aggregate). In both shapes the
-        analyzer rewrites one side's attribute ids to resolve the conflict —
-        and after that rewrite the cache-manager's plan matching no longer
-        substitutes the persisted frame on that side (verified on the live
-        plan: wave 2's fused plan carried ZERO InMemoryTableScans in the
-        expansion branch and recomputed politeness + selection + fetch from
-        the raw frontier snapshot — the politeness chain executed ~4× per
-        wave, the fetch pipeline 2×). An RDD leaf is immune: the dedup
-        renames the LogicalRDD's output attributes but they still bind to
-        the SAME checkpointed RDD, whose partitions compute exactly once
-        under the block manager's per-partition lock — even when both
-        branches of one job race to them.
-
-        Why static (AQE off): under AQE, plan→RDD conversion materializes
-        non-final query stages at COMPILE time (a serial driver round trip
-        per cut), and the compiled AdaptiveSparkPlanExec reports unknown
-        partitioning, so the checkpointed frame would lose its layout.
-        Compiled statically, the frontier snapshot reports
-        hashpartitioning(host_bucket), which both politeness windows ride
-        exchange-free (per_host_topk leads its partition keys with
-        host_bucket for exactly this)."""
-        with _conf_scope(self.spark, _AQE_OFF):
-            return df.localCheckpoint(eager=False)
+        return cut_lazy(df)
 
     # ------------------------------------------------------------------ #
     def run(self, seeds: DataFrame, resume: bool = False) -> CrawlRun:
@@ -812,10 +759,7 @@ class CrawlEngine:
             ),
             F.lit(0),
         )
-        wave_sel = frontier.select_wave(
-            polite, cfg.wave_budget, seq_bucket=seq_bucket,
-            materialize=self._cut_lazy,
-        )
+        wave_sel = frontier.select_wave(polite, cfg.wave_budget, seq_bucket=seq_bucket)
         if cfg.fetch_profile:
             # F-23: profile headers merged under the job's own
             from crawlspark import stealth
@@ -823,7 +767,7 @@ class CrawlEngine:
             wave_sel = stealth.with_profile_headers(
                 wave_sel, spark, cfg.fetch_profile
             )
-        wave_sel = self._cut_lazy(wave_sel)
+        wave_sel = cut_lazy(wave_sel)
         fetched = FT.fetch_simulate(
             wave_sel, self.pages, self.response_cache,
             carry_body_html=cfg.extract_links_from_body,
@@ -895,10 +839,10 @@ class CrawlEngine:
         # RDD leaf, not .persist(): the fused union's expansion branch
         # is attribute-deduped by the analyzer, after which the cached
         # plan no longer matches and the branch recomputed selection +
-        # fetch + outcomes from scratch (see _cut_lazy). As a leaf, both
-        # branches — and the end-of-run output union — read the same
+        # fetch + outcomes from scratch (see session.cut_lazy). As a leaf,
+        # both branches — and the end-of-run output union — read the same
         # once-computed blocks.
-        out = self._cut_lazy(FT.apply_outcomes(fetched, wave_ts))
+        out = cut_lazy(FT.apply_outcomes(fetched, wave_ts))
 
         # THE wave's single driver action (round 4; was 2 in r2/r3): the
         # outcome aggregate and the expansion per-partition aggregate are
@@ -953,7 +897,7 @@ class CrawlEngine:
         # sort-merge anti-join would shuffle the whole frontier on
         # job_id every wave. The hint also keeps the join broadcast
         # inside the frontier snapshot's statically-compiled cut
-        # (_cut_lazy), where AQE isn't around to discover it.
+        # (session.cut_lazy), where AQE isn't around to discover it.
         leftover = eligible.join(
             F.broadcast(wave_sel.select("job_id")), "job_id", "left_anti"
         )
@@ -1027,7 +971,7 @@ class CrawlEngine:
         wave = st.wave
         # a cut in both modes: no resume reads the admitted rows back (the
         # durable frontier snapshot below holds them)
-        admitted = self._cut_lazy(w.admitted)
+        admitted = cut_lazy(w.admitted)
         # narrow each seen delta before it enters the probe-side union
         # chain: a delta holds ≤ one wave's fresh keys (≪ the full seen
         # set the shuffle width is sized for), yet at full width the
@@ -1065,10 +1009,10 @@ class CrawlEngine:
         self._seen_chain += 1
         if self._seen_chain >= 8:
             # periodic compaction (the Nutch CrawlDb-merge analog): bound
-            # the delta chain so anti-join scan width stays O(P), not O(waves)
-            st.seen = self._materialize(
-                st.seen.repartition(self._n_shuffle, "url_hash"), "seen_full", wave
-            )
+            # the delta chain so anti-join scan width stays O(P), not
+            # O(waves). A cut in both modes: a resume reads the per-wave
+            # seen deltas, never the compacted set
+            st.seen = cut_lazy(st.seen.repartition(self._n_shuffle, "url_hash"))
             self._seen_chain = 0
 
         # wave outputs stay LAZY over the wave's cut `out`/`parted` frames in

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawlspark import constants as C
+from crawlspark.session import cut_lazy
 
 ORDER_COLS = ("priority", "seq")
 
@@ -30,13 +31,65 @@ def normalize_priority(col):
     ).cast("int")
 
 
+def _add_prefix_offsets(
+    parted: DataFrame,
+    group_cols,
+    lead_cols,
+    order_cols,
+    out_col: str,
+    value_col: str | None = None,
+) -> DataFrame:
+    """The shared tail of the two-phase distributed ranks and running sums.
+    `parted` carries `_pid`, its physical partition (or bucket). Within
+    each (`_pid`, `group_cols`, `lead_cols`) run, ordered by `order_cols`,
+    compute a local running value — the running count (a rank) without
+    `value_col`, else the running sum of `value_col` — then add the totals of
+    every run that precedes it in (`lead_cols`, `_pid`) order within its
+    `group_cols` group. Those offsets come from a per-run total aggregate
+    (≤ partitions × groups rows, so the prefix window is trivial), broadcast-
+    joined back — all lazy, no driver action.
+
+    The local frame is a lineage cut (`session.cut_lazy`): it is shared by
+    the offsets aggregate and the main join, and without a cut the whole
+    upstream runs twice. Not .persist(): the self-join makes the analyzer
+    rewrite the offsets side's attribute ids, after which the cache manager
+    no longer matches the persisted plan on that side and the offsets
+    subplan recomputes the upstream from scratch (observed on the live wave
+    plan). An RDD leaf survives the rewrite — renamed attributes still bind
+    to the same checkpointed RDD."""
+    keys = [*group_cols, *lead_cols]
+    local = Window.partitionBy("_pid", *keys).orderBy(*order_cols)
+    if value_col is None:
+        running, total = F.row_number().over(local), F.count("*")
+    else:
+        running = F.sum(value_col).over(
+            local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        total = F.sum(value_col)
+    parted = cut_lazy(parted.withColumn("_local", running))
+    preceding = (
+        Window.partitionBy(*group_cols)
+        .orderBy(*lead_cols, "_pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
+        parted.groupBy("_pid", *keys)
+        .agg(total.alias("_n"))
+        .withColumn("_off", F.coalesce(F.sum("_n").over(preceding), F.lit(0)))
+        .drop("_n")
+    )
+    return (
+        parted.join(F.broadcast(offsets), ["_pid", *keys])
+        .withColumn(out_col, (F.col("_local") + F.col("_off")).cast("long"))
+        .drop("_pid", "_local", "_off")
+    )
+
+
 def with_inspark_rank_bucketed(
     df: DataFrame,
     bucket_col,
     rank_col: str = "rank",
     n_parts: int | None = None,
-    *,
-    materialize,
 ) -> DataFrame:
     """Global (priority, seq) rank in ONE explicit hash exchange, no sampling.
 
@@ -49,14 +102,14 @@ def with_inspark_rank_bucketed(
     derives one from its driver-tracked seq watermarks; any clamped linear
     map of seq qualifies). Then:
 
-      _rn      = row_number within (_pid, priority) ordered by seq
+      local    = row_number within (_pid, priority) ordered by seq
       offsets  = per-(_pid, priority) counts, prefix-summed in
                  (priority, _pid) order — correct because bucket monotonicity
                  in seq within a priority means every row of (p, b) sorts
                  before every row of (p, b+1), and priority-major order
                  handles the rest. The aggregate is ≤ 3·n_parts rows, so the
                  single-partition prefix window is driver-trivial.
-      rank     = _rn + offset, broadcast-joined back.
+      rank     = local + offset, broadcast-joined back.
 
     One exchange total; the window, the count aggregate, and the join all
     ride it. Deterministic under stage retry (the bucket is a row function;
@@ -65,45 +118,10 @@ def with_inspark_rank_bucketed(
     a FIFO-draining frontier and degrades only by crowding stragglers into
     bucket 0 (clamped), never by breaking order.
     """
-    spark = df.sparkSession
     if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     parted = df.withColumn("_pid", bucket_col).repartition(n_parts, "_pid")
-    # shared by the offsets broadcast subplan AND the main join — without a
-    # cut the whole upstream (politeness windows, eligibility scan) runs
-    # twice. The engine passes a lazy RDD-leaf cut as `materialize`, not
-    # .persist(): the self-join below makes the analyzer
-    # rewrite the offsets side's attribute ids, after which the cache
-    # manager no longer matches the persisted plan on that side and the
-    # offsets subplan recomputes the upstream from scratch (observed on the
-    # live wave plan). An RDD leaf survives the rewrite — renamed
-    # attributes still bind to the same checkpointed RDD.
-    parted = parted.withColumn(
-        "_rn",
-        F.row_number().over(Window.partitionBy("_pid", "priority").orderBy("seq")),
-    )
-    parted = materialize(parted)
-    offsets = (
-        parted.groupBy("_pid", "priority")
-        .agg(F.count("*").alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.orderBy("priority", "_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_n")
-    )
-    return (
-        parted.join(F.broadcast(offsets), ["_pid", "priority"])
-        .withColumn(rank_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
+    return _add_prefix_offsets(parted, (), ("priority",), ("seq",), rank_col)
 
 
 def ranked_within(
@@ -112,7 +130,6 @@ def ranked_within(
     order_cols,
     rank_col: str = "rank",
     n_parts: int | None = None,
-    materialize=DataFrame.persist,
 ) -> DataFrame:
     """row_number() within `part_cols` WITHOUT funnelling each group through
     one task. A plain Window.partitionBy(priority) with 3 priority values is
@@ -120,51 +137,19 @@ def ranked_within(
     rows. Here: range-partition on (part_cols, order_cols), rank within
     (physical partition, group), then add per-(partition, group) offsets
     computed from a tiny count aggregate — all lazy, no driver action.
-    Empty `part_cols` gives the global rank by `order_cols`.
-
-    `materialize` cuts the ranked frame, which the offsets subplan and the
-    main join both read. The default persists it, so datapipe callers
-    release it with `datapipe.release_caches`; the engine passes its lazy
-    lineage cut, which the context cleaner frees."""
-    spark = df.sparkSession
+    Empty `part_cols` gives the global rank by `order_cols`."""
     if n_parts is None:
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pcols = [F.col(c) for c in part_cols]
-    ocols = [F.col(c) for c in order_cols]
-    parted = df.repartitionByRange(n_parts, *pcols, *ocols).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    parted = materialize(parted.withColumn(
-        "_rn", F.row_number().over(Window.partitionBy("_pid", *pcols).orderBy(*ocols))
-    ))
-    offsets = (
-        parted.groupBy("_pid", *pcols)
-        .agg(F.count("*").alias("_n"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    Window.partitionBy(*pcols)
-                    .orderBy("_pid")
-                    .rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_n")
-    )
-    return (
-        parted.join(F.broadcast(offsets), ["_pid", *part_cols])
-        .withColumn(rank_col, (F.col("_rn") + F.col("_off")).cast("long"))
-        .drop("_pid", "_rn", "_off")
-    )
+        n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    parted = df.repartitionByRange(
+        n_parts, *[F.col(c) for c in (*part_cols, *order_cols)]
+    ).withColumn("_pid", F.spark_partition_id())
+    return _add_prefix_offsets(parted, part_cols, (), order_cols, rank_col)
 
 
 def select_wave(
     eligible_polite: DataFrame,
     wave_budget: int,
     seq_bucket=None,
-    materialize=DataFrame.persist,
 ) -> DataFrame:
     """Global budget: top-`wave_budget` by (priority, seq) = strict priority
     with FIFO inside each level (the nested-select semantics of memory.go:37-64).
@@ -178,14 +163,9 @@ def select_wave(
     `seq_bucket`: optional pure-row bucket column, monotone in seq within
     each priority (the engine passes one derived from its seq watermarks) —
     routes through `with_inspark_rank_bucketed`, saving the range-sampling
-    job and one of the two exchanges the range-partitioned rank pays.
-    `materialize` cuts the rank's shared frame (see `ranked_within`)."""
+    job and one of the two exchanges the range-partitioned rank pays."""
     if seq_bucket is not None:
-        ranked = with_inspark_rank_bucketed(
-            eligible_polite, seq_bucket, "rank", materialize=materialize
-        )
+        ranked = with_inspark_rank_bucketed(eligible_polite, seq_bucket, "rank")
     else:
-        ranked = ranked_within(
-            eligible_polite, (), ORDER_COLS, "rank", materialize=materialize
-        )
+        ranked = ranked_within(eligible_polite, (), ORDER_COLS, "rank")
     return ranked.filter(F.col("rank") <= wave_budget)

@@ -337,14 +337,3 @@ def fetch_validate_udf(image_id: pd.Series, px_size: pd.Series) -> pd.DataFrame:
             oks.append(False)
             hashes.append(0)
     return pd.DataFrame({"psnr_db": psnrs, "pixels_ok": oks, "phash": hashes})
-
-
-@F.pandas_udf(T.LongType())
-def phash_udf(data: pd.Series, fmt: pd.Series) -> pd.Series:
-    out = []
-    for raw, f in zip(data, fmt):
-        try:
-            out.append(average_hash(DECODERS[f](bytes(raw))))
-        except Exception:
-            out.append(0)
-    return pd.Series(out, dtype="int64")

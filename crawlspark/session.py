@@ -9,8 +9,11 @@ cores (not the 200 default), UTC so DuckDB-oracle comparisons are stable.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def _default_driver_mem() -> str:
@@ -117,3 +120,64 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_scope(spark, values: dict[str, str]):
+    """Set the session SQL conf `values` for the body and restore the
+    previous values afterwards, also when the body raises."""
+    conf = spark.conf
+    prev = {k: conf.get(k) for k in values}
+    try:
+        for k, v in values.items():
+            conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            conf.set(k, v)
+
+
+def cut_lazy(df: DataFrame) -> DataFrame:
+    """The package's one lifetime for shared per-query and per-run frames: a
+    statically compiled, NON-EAGER localCheckpoint. Every frame that is
+    shared or whose lineage must stop goes through it — the crawl engine's
+    selection, fetch outcomes, expansion and memory-mode `_materialize`, the
+    frontier's rank tail, and the datapipe's fan-out frames — so all of them
+    have one lifetime: the checkpointed blocks are freed by the context
+    cleaner once the frame's Python references drop (the engine's memory
+    mode holds them until the end-of-run output union). Nothing is
+    persisted, so nothing needs releasing. The only persisted frames in the
+    package are the crawl engine's engine-lifetime fixtures.
+
+    Why not .persist(): the wave's fused action is a UNION of two
+    aggregates over the same frames (outcomes + expansion), and the rank
+    is a SELF-join (frame ⋈ its own count aggregate). In both shapes the
+    analyzer rewrites one side's attribute ids to resolve the conflict —
+    and after that rewrite the cache-manager's plan matching no longer
+    substitutes the persisted frame on that side (verified on the live
+    plan: wave 2's fused plan carried ZERO InMemoryTableScans in the
+    expansion branch and recomputed politeness + selection + fetch from
+    the raw frontier snapshot — the politeness chain executed ~4× per
+    wave, the fetch pipeline 2×). An RDD leaf is immune: the dedup
+    renames the LogicalRDD's output attributes but they still bind to
+    the SAME checkpointed RDD, whose partitions compute exactly once
+    under the block manager's per-partition lock — even when both
+    branches of one job race to them.
+
+    Why static (AQE off): under AQE, plan→RDD conversion materializes
+    non-final query stages at COMPILE time (a serial driver round trip
+    per cut), and the compiled AdaptiveSparkPlanExec reports unknown
+    partitioning, so the checkpointed frame would lose its layout.
+    Compiled statically, the frontier snapshot reports
+    hashpartitioning(host_bucket), which both politeness windows ride
+    exchange-free (per_host_topk leads its partition keys with
+    host_bucket for exactly this). A static compile also runs a range
+    exchange's bounds-sampling job when the cut is made, not when the
+    query is consumed.
+
+    The cut sets AQE off in the frame's session while it compiles and
+    restores it afterwards, so it is not reentrant across threads that
+    share a session: another thread's query planned meanwhile sees AQE
+    off, and two concurrent cuts can restore each other's value."""
+    with conf_scope(df.sparkSession, _AQE_OFF):
+        return df.localCheckpoint(eager=False)

@@ -1,16 +1,16 @@
-"""Cache contract: operators may persist fan-out frames for their own plan,
-and `datapipe.release_caches` must leave NO cached frames behind once the
-consuming action is done (VERDICT r2 item 9 — storage-memory hygiene for
-long-lived sessions). A crawl run persists nothing of its own."""
+"""Storage hygiene for long-lived sessions (VERDICT r2 item 9): neither a
+datapipe operator nor a crawl run leaves a cached frame behind. Their
+shared frames are lineage cuts (`session.cut_lazy`) that the context
+cleaner frees, so the CacheManager holds only what callers persisted — the
+crawl engine's fixtures among them."""
+
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
-from crawlspark.datapipe import release_caches
-
-
-def _n_cached(spark) -> int:
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+# the benchmark's checked-in copy of the sf0.01 tables
+SF = pathlib.Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.01"
 
 
 def _docs(spark):
@@ -21,66 +21,44 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, source string, text string")
 
 
-def _settled_baseline(spark, timeout_s: float = 15.0) -> int:
-    """clearCache unpersists ASYNCHRONOUSLY: right after release_caches a
-    shared session still lists blocks mid-drain from prior suites, and a
-    baseline read then is inflated — every later `> base` probe silently
-    fails (the in-suite flake this replaces). Poll until the count stops
-    falling before taking the baseline."""
-    import time
-
-    release_caches(spark)
-    n = _n_cached(spark)
-    stable = 0
-    deadline = time.monotonic() + timeout_s
-    while time.monotonic() < deadline:
-        time.sleep(0.3)
-        m = _n_cached(spark)
-        # require several consecutive non-falling readings: a single pause
-        # in the context cleaner's drain otherwise returns an INFLATED
-        # baseline, and when the leftover blocks finish draining during the
-        # operator run the `> base` probe silently never fires (the flake
-        # this suite saw twice in full-suite position on a busy session)
-        if m >= n:
-            stable += 1
-            if stable >= 4:
-                return m
-        else:
-            stable = 0
-        n = m
-    return n
+def _n_cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
 
 
-def test_release_after_each_operator(spark):
-    from crawlspark.datapipe.dedup import lsh_candidate_pairs, ngram_jaccard_pairs
+def test_datapipe_operators_add_no_cache_entries(spark):
+    """Every shared frame a datapipe operator builds is a lineage cut, not a
+    persist: building and consuming each operator's result leaves the
+    session's CacheManager entry count unchanged, with no `release_caches`
+    anywhere. The count is synchronous (a persist registers its entry at
+    once), so no settling is needed."""
+    import __spark_entry__ as E
+    from crawlspark.datapipe.dedup import (
+        lsh_candidate_pairs,
+        neardup_components,
+        ngram_jaccard_pairs,
+    )
     from crawlspark.datapipe.sampling import curation_pipeline, scan_cumsum
 
     d = _docs(spark)
-    # baseline, not zero: in a shared session other suites' localCheckpoint
-    # blocks (engine lineage cuts — NOT SQL-cache entries) legitimately
-    # survive clearCache; the hygiene claim is about the operators' OWN
-    # persisted frames, i.e. storage returns to baseline after release
-    persisted_any = False
-    for build in (
-        lambda: lsh_candidate_pairs(d, k=8, bands=4),
-        lambda: ngram_jaccard_pairs(d, min_jaccard=0.2),
-        lambda: curation_pipeline(d, budget=64, sample_pct=80),
-        lambda: scan_cumsum(
+    builds = {
+        "lsh_candidate_pairs": lambda: lsh_candidate_pairs(d, k=8, bands=4),
+        "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(d, min_jaccard=0.2),
+        "curation_pipeline": lambda: curation_pipeline(d, budget=64, sample_pct=80),
+        "scan_cumsum": lambda: scan_cumsum(
             d.select("doc_id", F.length("text").alias("n")), "doc_id", "n"
         ),
-    ):
-        # fresh settled baseline per operator: a single run-wide baseline
-        # races the drain of PRIOR suites' blocks (see _settled_baseline)
-        base = _settled_baseline(spark)
+        "neardup_components": lambda: neardup_components(d, k=12, bands=3),
+        "fifo_within_priority": lambda: E.queries()["fifo_within_priority"](
+            spark, str(SF)
+        ),
+    }
+    added = {}
+    for name, build in builds.items():
+        base = _n_cache_entries(spark)
         build().write.format("noop").mode("overwrite").save()  # consuming action
-        persisted_any = persisted_any or _n_cached(spark) > base
-        # the hygiene hook fully releases it (settle: same async drain)
-        assert _settled_baseline(spark) <= base
-    assert persisted_any  # the operators really do persist fan-out frames
-
-
-def _n_cache_entries(spark) -> int:
-    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+        if _n_cache_entries(spark) != base:
+            added[name] = _n_cache_entries(spark) - base
+    assert not added, added
 
 
 @pytest.mark.parametrize("mode", ["memory", "durable"])

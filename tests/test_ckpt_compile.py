@@ -1,8 +1,8 @@
-"""Every engine path that changes session SQL conf scopes it: the checkpoint
-cuts (`_materialize`, `_cut_lazy`) and the execution-mode switch that
-`run()` applies (`_exec_mode`) must leave AQE and the codegen confs exactly
-as they found them — also when the scoped body raises — and a cut keeps
-every row.
+"""Every path that changes session SQL conf scopes it: the checkpoint cuts
+(the engine's `_materialize` and the package's one lineage cut,
+`session.cut_lazy`) and the execution-mode switch that `run()` applies
+(`_exec_mode`) must leave AQE and the codegen confs exactly as they found
+them — also when the scoped body raises — and a cut keeps every row.
 
 Inside the scope each path sees only its own setting: every memory-mode
 cut compiles with AQE off, and below the wave-budget crossover the run plans
@@ -13,6 +13,7 @@ import pytest
 
 from crawlspark import synth
 from crawlspark.engine import INTERPRETED_BELOW_WAVE_BUDGET, CrawlConfig, CrawlEngine
+from crawlspark.session import cut_lazy
 
 CONFS = (
     "spark.sql.adaptive.enabled",
@@ -58,7 +59,7 @@ def _materialize_keep_layout(eng, df):
 CASES = {
     "materialize": ({}, lambda eng, df: eng._materialize(df, "pending", 0), AQE_OFF),
     "materialize_keep_layout": ({}, _materialize_keep_layout, AQE_OFF),
-    "cut_lazy": ({}, lambda eng, df: eng._cut_lazy(df), AQE_OFF),
+    "cut_lazy": ({}, lambda eng, df: cut_lazy(df), AQE_OFF),
     "exec_mode_below_crossover": ({}, _in_exec_mode, {**INTERPRETED, **AQE_OFF}),
     # the crossover is strict: a wave budget equal to it keeps codegen
     "exec_mode_at_crossover": (

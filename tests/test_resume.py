@@ -12,10 +12,10 @@ from crawlspark import synth
 from crawlspark.engine import CrawlConfig, CrawlEngine
 
 
-def _mk_engine(spark, world, workdir, max_waves):
+def _mk_engine(spark, world, workdir, max_waves, wave_budget=30):
     cfg = CrawlConfig(
         validate_images=False,
-        wave_budget=30,
+        wave_budget=wave_budget,
         max_waves=max_waves,
         workdir=workdir,
     )
@@ -110,6 +110,28 @@ def test_manifest_commit_is_atomic(spark, world, tmp_path_factory):
     # the admitted rows are a cut, not a durable table: no resume reads
     # them back, the frontier snapshot holds them
     assert not os.path.exists(os.path.join(wd, "admitted"))
+
+
+def test_durable_seen_compaction_writes_no_table(spark, world, tmp_path_factory):
+    """The every-8-waves seen compaction is a lineage cut in both modes: a
+    resume reads the per-wave seen deltas, never the compacted set, so a
+    durable crawl past wave 8 writes no `seen_full` table, and its outputs
+    equal the memory-mode crawl's."""
+    import os
+
+    def run(workdir):
+        # small waves, so the crawl outlasts wave 8
+        eng = _mk_engine(spark, world, workdir, max_waves=9, wave_budget=5)
+        return eng.run(synth.seeds_df(spark, world))
+
+    wd = str(tmp_path_factory.mktemp("compaction"))
+    durable, memory = run(wd), run(None)
+    assert durable.waves == memory.waves == 9
+    assert not os.path.exists(os.path.join(wd, "seen_full"))
+    assert _order_rows(durable) == _order_rows(memory)
+    for table in ("results", "terminal", "seen"):
+        assert _table_rows(getattr(durable, table)) == _table_rows(getattr(memory, table)), table
+    shutil.rmtree(wd, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,6 @@ class FakeCatalogIO:
         self.spark = spark
         self.tables: dict[tuple[str, int], tuple[list, object]] = {}
         self.snapshots: list[dict] = []  # append-only, like catalog snapshots
-        self.blobs: dict[str, bytes] = {}
 
     # -- manifest ---------------------------------------------------------
     def read_manifest(self):
@@ -55,14 +54,6 @@ class FakeCatalogIO:
         for w in have[1:]:
             df = df.unionByName(self.read_wave(table, w))
         return df
-
-    # -- blobs ------------------------------------------------------------
-    def write_blob(self, name, data):
-        self.blobs[name] = bytes(data)
-        return f"fake://blob/{name}"
-
-    def read_blob(self, name):
-        return self.blobs.get(name)
 
 
 def _mk_engine(spark, world, io, max_waves):
